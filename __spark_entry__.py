@@ -4761,14 +4761,7 @@ def _r11_maxsim_topk(spark: SparkSession, sf: str) -> DataFrame:
     dtok = token_vectors(docs, "doc_id", "text", dim=EMB_DIM, max_tokens=12)
     qtok = query_token_weights(_queries_df(spark), "query_id", "question",
                                dim=EMB_DIM)
-    # dim=None (r19): the interpreted HOF cosine measured 2-2.5x FASTER
-    # than the dim-unrolled "codegen" cosine on this exact shape at
-    # sf0.1 (2.75-2.79 s vs 5.47-6.94 s, 3 interleaved pairs) — the
-    # unrolled projection method exceeds HotSpot's JIT size threshold
-    # and runs as interpreted bytecode.  Values are identical (pinned by
-    # test_cos_micros_fixed_matches_fold; the ±0.0 edge washes out at
-    # the integer round).
-    return maxsim_topk(dtok, qtok, "doc_id", "query_id", k=10, dim=None)
+    return maxsim_topk(dtok, qtok, "doc_id", "query_id", k=10)
 
 
 def _r11_oracle_sql() -> str:
@@ -4856,10 +4849,7 @@ def _r12_maxsim_rerank(spark: SparkSession, sf: str) -> DataFrame:
     dtok = token_vectors(docs, "doc_id", "text", dim=EMB_DIM, max_tokens=12)
     qtok = query_token_weights(_queries_df(spark), "query_id", "question",
                                dim=EMB_DIM)
-    # dim=None (r19): see _r11_maxsim_topk — the HOF cosine beats the
-    # unrolled one on this JVM; values identical
-    return maxsim_rerank(shortlist, dtok, qtok, "doc_id", "query_id", k=10,
-                         dim=None)
+    return maxsim_rerank(shortlist, dtok, qtok, "doc_id", "query_id", k=10)
 
 
 def _r12_oracle_sql() -> str:

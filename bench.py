@@ -95,12 +95,11 @@ def _bench_skew_agg(spark, sf_dir: str, salted: bool) -> None:
 
 def _bench_skew_join(spark, sf_dir: str, salted: bool) -> None:
     from lawlm_spark.operators.skew import salted_join
+    from lawlm_spark.session import scoped_conf
 
     df = _skewed_lineitem(spark, sf_dir)
     dim = _skew_dim(spark)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with scoped_conf(spark, {"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         if salted:
             joined = salted_join(df, dim, "zkey", salt_buckets=16)
         else:
@@ -111,8 +110,6 @@ def _bench_skew_join(spark, sf_dir: str, salted: bool) -> None:
                 F.count("*").alias("n"), F.sum("l_quantity").alias("qty")
             )
         )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def bench_queries(

@@ -50,7 +50,9 @@ def assemble_context(
     out_col: str = "context",
     max_chars: int = MAX_CONTEXT_CHARS,
 ) -> DataFrame:
-    """O20: per query, rank-ordered blocks joined by blank lines, capped.
+    """O20: per query, rank-ordered blocks joined by blank lines, capped,
+    plus `n_blocks` (long), the number of blocks assembled — so a caller
+    that reports its source count needs no second aggregation.
 
     collect_list under an explicit sort_array keeps assembly deterministic
     across partitionings (array_sort on (rank, block) pairs).
@@ -68,6 +70,7 @@ def assemble_context(
                 1,
                 max_chars,
             ).alias(out_col),
+            F.size("_ps").cast("long").alias("n_blocks"),
         )
     )
 

@@ -38,14 +38,15 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(denom > 0, dot(a, b) / denom).otherwise(F.lit(0.0))
 
 
-# NOTE (r19): dim-unrolled "codegen twins" of dot/norm/cosine (the
-# cos_micros_fixed pattern generalized) were BUILT, PROVEN bit-identical
-# and MEASURED here — and rejected: at dim=64 the unrolled projection
-# method exceeds HotSpot's JIT bytecode-size threshold and executes as
-# interpreted bytecode, measuring 4-6x SLOWER than the HOF fold on a 2M
-# row microbench (fold 2.1 s vs unrolled 12-13 s) and 2-2.5x slower on
-# the real maxsim pair stream.  The folds below stay the fast JVM form;
-# see OPTIMIZATION_r19.md for the full numbers.
+# NOTE (r19): dim-unrolled "codegen twins" of dot/norm/cosine (explicit
+# left-associated sums of get(a,i)*get(b,i)) were built, proven
+# bit-identical and measured — and rejected: at dim=64 the unrolled
+# projection method exceeds HotSpot's JIT bytecode-size threshold and
+# executes as interpreted bytecode, measuring 4-6x SLOWER than the HOF
+# fold on a 2M-row microbench (fold 2.1 s vs unrolled 12-13 s) and
+# 2-2.5x slower on the r11 maxsim pair stream at sf0.1 (query 2.75-2.79 s
+# vs 5.47-6.94 s, 3 interleaved pairs).  The folds below are the one
+# cosine implementation.
 
 
 def cos_micros(a: Column, b: Column) -> Column:
@@ -62,39 +63,6 @@ def cos_micros(a: Column, b: Column) -> Column:
     `CAST(round(cos_expr * 1000000) AS BIGINT)`.
     """
     return F.round(cosine(a, b) * F.lit(1000000.0), 0).cast("long")
-
-
-def cos_micros_fixed(a: Column, b: Column, dim: int) -> Column:
-    """Codegen twin of `cos_micros` for vectors of KNOWN length `dim`.
-
-    The HOF fold (`aggregate`/`zip_with`) runs INTERPRETED — lambda
-    expressions are excluded from whole-stage codegen — which made the
-    maxsim token-pair stream the hottest path in r15 profiling (3
-    folds × 64 interpreted lambda steps per pair).  This twin unrolls
-    the dot into an explicit left-associated sum of `get(a,i)*get(b,i)`
-    terms: pure arithmetic + array indexing, fully codegen.
-
-    Bit-identical to cos_micros on every input whose arrays all have
-    exactly `dim` elements: the fold computes ((0.0+p0)+p1)+…, the
-    unrolled form (p0+p1)+… — 0.0+p0 == p0 except that p0 = -0.0
-    yields +0.0 vs -0.0, a divergence that can only persist while the
-    running sum is exactly ±0.0 and washes out at the final
-    round(cos·1e6) cast (±0.0 → 0).  Equivalence is pinned by
-    tests/test_mmr.py::test_cos_micros_fixed_matches_fold.  Do NOT use
-    on variable-length vectors: out-of-range `get` is NULL here, while
-    the fold pads to the longer input."""
-    if dim < 1:
-        raise ValueError(f"dim must be >= 1, got {dim}")
-
-    def dotf(x: Column, y: Column) -> Column:
-        acc = F.get(x, 0).cast("double") * F.get(y, 0).cast("double")
-        for i in range(1, dim):
-            acc = acc + F.get(x, i).cast("double") * F.get(y, i).cast("double")
-        return acc
-
-    denom = F.sqrt(dotf(a, a)) * F.sqrt(dotf(b, b))
-    cos = F.when(denom > 0, dotf(a, b) / denom).otherwise(F.lit(0.0))
-    return F.round(cos * F.lit(1000000.0), 0).cast("long")
 
 
 def cos_micros_py(va, vb) -> int:

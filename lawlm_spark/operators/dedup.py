@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from lawlm_spark.functions.text import fingerprint, shingles
 from lawlm_spark.functions.vectors import cosine
+from lawlm_spark.session import materialize
 
 
 # ---------------------------------------------------------------------------
@@ -224,11 +225,7 @@ def lsh_candidate_pairs(
     if max_band_bucket is not None:
         band_rows = cap_band_buckets(band_rows, max_band_bucket)
     if cache_registry is not None:
-        from pyspark import StorageLevel
-
-        band_rows = band_rows.persist(StorageLevel.MEMORY_AND_DISK)
-        band_rows.count()
-        cache_registry.append(band_rows)
+        band_rows, _n = materialize(band_rows, cache_registry)
     a = band_rows.select(F.col(id_col).alias("id_a"), "band", "band_key")
     b = band_rows.select(F.col(id_col).alias("id_b"), "band", "band_key")
     return (
@@ -300,12 +297,7 @@ def minhash_dedup_pairs(
     the second execution of the signature aggregate the band self-join
     otherwise pays — see lsh_candidate_pairs.
     """
-    from pyspark import StorageLevel
-
-    sh = shingle_table(docs, id_col, text_col, n).persist(StorageLevel.MEMORY_AND_DISK)
-    sh.count()
-    if cache_registry is not None:
-        cache_registry.append(sh)
+    sh, _n = materialize(shingle_table(docs, id_col, text_col, n), cache_registry)
     cand = lsh_candidate_pairs(
         docs, id_col, text_col, n, num_hashes, bands, sh=sh,
         max_band_bucket=max_band_bucket, cache_registry=cache_registry,

@@ -151,17 +151,10 @@ def winnow_pairs(
     final action — without it the block stays until session LRU
     eviction (fine for one-shot jobs).
     """
-    from pyspark import StorageLevel
+    from lawlm_spark.session import materialize
 
-    fp = (
-        winnow_fingerprints(docs, id_col, text_col, k, w)
-        .select("id", "fhash")
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    fp.count()
-    if cache_registry is not None:
-        cache_registry.append(fp)
+    fp = winnow_fingerprints(docs, id_col, text_col, k, w).select("id", "fhash")
+    fp, _n = materialize(fp.distinct(), cache_registry)
     kept = (
         fp.groupBy("fhash")
         .agg(F.count(F.lit(1)).alias("_df"))

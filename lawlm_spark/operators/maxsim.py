@@ -59,7 +59,6 @@ from lawlm_spark.functions.text import tokenize
 from lawlm_spark.functions.vectors import (
     add_fake_embedding,
     cos_micros,
-    cos_micros_fixed,
     fake_embedding,
 )
 from lawlm_spark.operators.ranking import top_k
@@ -143,7 +142,6 @@ def _maxsim_score(
     id_col: str,
     query_id_col: str,
     k: int,
-    dim: int | None,
 ) -> DataFrame:
     """Shared scoring tail of maxsim_topk and maxsim_rerank (they
     differ only in how the candidate (doc-token × query-token) rows
@@ -151,7 +149,7 @@ def _maxsim_score(
     the weighted per-(query, doc) sum, then the per-query top-k.
     `cand` carries (query_id, id, vec, _q_token, w, _q_vec).  One
     shared definition so the scoring contract (grouping keys, integer
-    weights, dim-conditional codegen cosine, doc-id tiebreak) cannot
+    weights, integer cosine, doc-id tiebreak) cannot
     silently diverge between the one-stage and two-stage operators."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
@@ -160,11 +158,7 @@ def _maxsim_score(
         id_col,
         "_q_token",
         "w",
-        (
-            cos_micros_fixed(F.col("vec"), F.col("_q_vec"), dim)
-            if dim is not None
-            else cos_micros(F.col("vec"), F.col("_q_vec"))
-        ).alias("_sim"),
+        cos_micros(F.col("vec"), F.col("_q_vec")).alias("_sim"),
     )
     per_term = sims.groupBy(query_id_col, id_col, "_q_token", "w").agg(
         F.max("_sim").alias("_max_sim")
@@ -188,7 +182,6 @@ def maxsim_rerank(
     id_col: str = "doc_id",
     query_id_col: str = "query_id",
     k: int = 10,
-    dim: int | None = None,
 ) -> DataFrame:
     """Two-stage late interaction — the ColBERTv2/PLAID serving shape
     (Santhanam et al. 2022, "PLAID: An Efficient Engine for Late
@@ -210,27 +203,12 @@ def maxsim_rerank(
     same two map-side-partial keyed aggregates and WindowGroupLimit
     top-k.  At 100 TB this is the path: stage 1 bounds the candidate
     set, so late interaction costs O(|shortlist| · tokens) instead of
-    O(corpus · query tokens).
-
-    `dim`: when every vector has exactly this length, pass it to use
-    the unrolled cosine (vectors.cos_micros_fixed — bit-identical
-    values).  PERF NOTE (r19 re-measure, superseding the r15 claim):
-    on the current JVM the unrolled 64-dim projection method exceeds
-    HotSpot's JIT size threshold and runs as interpreted bytecode —
-    the HOF fold measured 2-2.5x FASTER on the r11 pair stream at
-    sf0.1, so the engine's entries now pass dim=None; prefer the fold
-    unless a measurement on your deployment says otherwise.
-    PRECONDITION (ADVICE
-    r15): with dim set, every vector in BOTH token tables must have
-    exactly `dim` elements — cos_micros_fixed's out-of-range get()
-    NULLs a shorter vector's tail product, silently scoring that pair
-    0 rather than erroring.  Ragged token tables must either fix the
-    column upstream or omit dim (the HOF path handles any length)."""
+    O(corpus · query tokens)."""
     pairs = shortlist.select(query_id_col, id_col)
     cand = doc_tokens.join(broadcast(pairs), id_col).join(
         broadcast(_q_proj(query_tokens, query_id_col)), query_id_col
     )
-    return _maxsim_score(cand, id_col, query_id_col, k, dim)
+    return _maxsim_score(cand, id_col, query_id_col, k)
 
 
 def maxsim_topk(
@@ -239,7 +217,6 @@ def maxsim_topk(
     id_col: str = "doc_id",
     query_id_col: str = "query_id",
     k: int = 10,
-    dim: int | None = None,
 ) -> DataFrame:
     """(query_id, doc_id, maxsim_micros, rn): per-query top-k documents
     by the late-interaction score Σ_terms w · max_doc_token
@@ -249,23 +226,8 @@ def maxsim_topk(
     `query_tokens` is (query_id, token, w, vec) — query_token_weights'
     shape.  The query side broadcasts; the two aggregates and the
     top-k window are the only exchanges, all keyed, none
-    single-partition (plan-pinned).
-
-    `dim`: when every vector has exactly this length, pass it to use
-    the unrolled cosine (vectors.cos_micros_fixed — bit-identical
-    values).  PERF NOTE (r19 re-measure, superseding the r15 claim):
-    on the current JVM the unrolled 64-dim projection method exceeds
-    HotSpot's JIT size threshold and runs as interpreted bytecode —
-    the HOF fold measured 2-2.5x FASTER on the r11 pair stream at
-    sf0.1, so the engine's entries now pass dim=None; prefer the fold
-    unless a measurement on your deployment says otherwise.
-    PRECONDITION (ADVICE
-    r15): with dim set, every vector in BOTH token tables must have
-    exactly `dim` elements — cos_micros_fixed's out-of-range get()
-    NULLs a shorter vector's tail product, silently scoring that pair
-    0 rather than erroring.  Ragged token tables must either fix the
-    column upstream or omit dim (the HOF path handles any length)."""
+    single-partition (plan-pinned)."""
     cand = doc_tokens.crossJoin(
         broadcast(_q_proj(query_tokens, query_id_col))
     )
-    return _maxsim_score(cand, id_col, query_id_col, k, dim)
+    return _maxsim_score(cand, id_col, query_id_col, k)

@@ -153,7 +153,7 @@ def pareto_front(
     receive it and unpersist after your final consuming action (the
     dedup.py::minhash_dedup_pairs contract).
     """
-    from pyspark import StorageLevel
+    from lawlm_spark.session import materialize
 
     metric_cols = list(metric_cols)
     if not metric_cols:
@@ -167,12 +167,7 @@ def pareto_front(
             if len(batch):
                 yield _local_skyline(batch, metric_cols)
 
-    cand = df.mapInPandas(prune, schema=schema).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    if cache_registry is not None:
-        cache_registry.append(cand)
-    n_cand = cand.count()
+    cand, n_cand = materialize(df.mapInPandas(prune, schema=schema), cache_registry)
     if n_cand > max_candidates:
         raise ValueError(
             f"pareto_front: {n_cand} local-skyline survivors exceed "

@@ -21,12 +21,10 @@ collapsed to one task (r18 A/B).  The operator knows its own CPU
 profile; the session does not.  Only operators measured faster under
 the policy opt in.
 
-The conf is set before the operator's internal actions run and
-restored in a finally block, so a raising operator cannot leak the
-policy into the caller's session (the run_v41_query Arrow-batch
-pattern).  Results are partitioning-independent for every wrapped
-operator (certified layout-stable), so this cannot change any query's
-output.
+The set/restore mechanism (and its session-conf lock) is
+session.scoped_conf; this module only decides the key and value.
+Results are partitioning-independent for every wrapped operator
+(certified layout-stable), so this cannot change any query's output.
 
 Production note: pair the policy with an explicit
 `spark.sql.adaptive.advisoryPartitionSizeInBytes` sized for the
@@ -36,47 +34,13 @@ is left untouched so the bench measures the stock advisory.
 
 from __future__ import annotations
 
-import os
-import threading
-from contextlib import contextmanager
+from lawlm_spark.session import _SESSION_CONF_LOCK, scoped_conf  # noqa: F401
 
 _KEY = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
 
-# Session-conf set/restore guard (ADVICE r18 / VERDICT r18 item 5):
-# these context managers mutate SESSION-level SQL conf, so two driver
-# threads interleaving their set/restore could leak a policy into the
-# session or apply it to an unrelated concurrent query.  Today no
-# concurrent driver path overlaps a wrapped operator (write_mirrors'
-# pool runs only in ingest paths, outside any wrapped block), but the
-# lock makes the save/restore itself race-free and documents the
-# assumption.  RLock: a wrapped operator may nest another wrapped
-# helper on the same thread (e.g. input_sized_shuffle inside a caller
-# that already holds the lock).  NOTE the lock serializes the wrapped
-# REGION, not just the conf calls — by design: a concurrent query on
-# the same session *inside* someone else's policy block is exactly the
-# hazard being excluded.
-_SESSION_CONF_LOCK = threading.RLock()
 
-
-@contextmanager
 def coalesced_shuffles(spark):
     """Within the block, AQE coalesces shuffle partitions purely by the
     advisory byte size (parallelismFirst=false); the previous session
-    value is restored on exit, raise or return.
-
-    SPARK_GRAFT_NO_COALESCE=1 disables the policy (A/B measurement and
-    an ops escape hatch if a deployment's advisory size is mis-sized
-    for these operators)."""
-    if os.environ.get("SPARK_GRAFT_NO_COALESCE", "") == "1":
-        yield
-        return
-    with _SESSION_CONF_LOCK:
-        old = spark.conf.get(_KEY, None)
-        spark.conf.set(_KEY, "false")
-        try:
-            yield
-        finally:
-            if old is None:
-                spark.conf.unset(_KEY)
-            else:
-                spark.conf.set(_KEY, old)
+    value is restored on exit, raise or return."""
+    return scoped_conf(spark, {_KEY: "false"})

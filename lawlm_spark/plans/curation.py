@@ -29,6 +29,7 @@ from lawlm_spark.functions.text import (
     word_count,
 )
 from lawlm_spark.operators.dedup import minhash_dedup_pairs
+from lawlm_spark.session import materialize
 
 
 def curate_documents(
@@ -74,16 +75,9 @@ def curate_documents(
     # localCheckpoint here: lineage survives for recompute-on-eviction and
     # warm re-runs are 2x faster.  At 100 TB, checkpoint to reliable
     # storage instead.
-    from pyspark import StorageLevel
-
-    exact = (
-        fp.join(keep, [id_col, "_fp"], "left_semi")
-        .drop("_fp")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    exact, _n = materialize(
+        fp.join(keep, [id_col, "_fp"], "left_semi").drop("_fp"), cache_registry
     )
-    exact.count()
-    if cache_registry is not None:
-        cache_registry.append(exact)
 
     # 2. near-dup removal.  'components' (default) keeps the min id per
     # CONNECTED COMPONENT of verified pairs — chain/star-correct (edges

@@ -41,6 +41,7 @@ from lawlm_spark.operators.chunking import (
 )
 from lawlm_spark.operators.ranking import rrf_fuse, threshold, top_k
 from lawlm_spark.operators.similarity import brute_force_topk, rp_lsh_topk
+from lawlm_spark.session import materialize
 
 EMBED_DIM = 64
 SCORE_THRESHOLD = 0.0     # RRF scores live in (0, ~0.033]; reference's 0.4
@@ -101,12 +102,7 @@ def ingest_documents(
         F.col("chunk_text"),
     ).withColumn("point_id", uuid5(F.col("chunk_key")))
     if eager_share:
-        from pyspark import StorageLevel
-
-        keyed = keyed.persist(StorageLevel.MEMORY_AND_DISK)
-        keyed.count()
-        if cache_registry is not None:
-            cache_registry.append(keyed)
+        keyed, _n = materialize(keyed, cache_registry)
 
     chunks = add_fake_embedding(keyed, "chunk_text", "embedding", dim)
     postings = bm25_index(keyed, "chunk_key", "chunk_text")
@@ -304,8 +300,9 @@ def rag_answer(
     dense_retriever: str = "brute",
     retriever_opts: dict | None = None,
 ) -> DataFrame:
-    """O37: full RAG — search, project payload (O34), assemble context
-    (O20), summarize with the deterministic fake LLM (O35).
+    """O37: full RAG — search, format one snippet block per hit (O34),
+    assemble context and source count in one aggregation (O20),
+    summarize with the deterministic fake LLM (O35).
 
     Returns (query_id, question, n_sources, context, summary).
     """
@@ -313,33 +310,29 @@ def rag_answer(
         chunks, postings, queries, query_id_col, question_col, k=k,
         dense_retriever=dense_retriever, retriever_opts=retriever_opts,
     )
-    payload = hits.join(
-        chunks.select("chunk_key", "chunk_text"), "chunk_key"
-    ).select(  # O34 result projection (app.py:177-184)
+    # one context block per hit (O34 snippet, app.py:177-184); context
+    # and source count come out of the one per-query aggregation
+    blocks = hits.join(chunks.select("chunk_key", "chunk_text"), "chunk_key").select(
         query_id_col,
-        "chunk_key",
         "final_rank",
-        F.col("fused_score"),
-        llm.truncate_preview(F.col("chunk_text"), llm.SNIPPET_CHARS).alias("snippet"),
-    )
-    blocks = payload.select(
-        query_id_col,
-        F.col("final_rank"),
-        llm.format_hit(F.col("final_rank"), F.col("chunk_key"), F.col("snippet")).alias("block"),
+        llm.format_hit(
+            F.col("final_rank"),
+            F.col("chunk_key"),
+            llm.truncate_preview(F.col("chunk_text"), llm.SNIPPET_CHARS),
+        ).alias("block"),
     )
     ctx = llm.assemble_context(blocks, [query_id_col], "final_rank", "block")
-    n_src = payload.groupBy(query_id_col).agg(F.count("*").alias("n_sources"))
+    context = F.coalesce("context", F.lit(""))
     return (
         queries.select(query_id_col, question_col)
         .join(ctx, query_id_col, "left")
-        .join(n_src, query_id_col, "left")
         .select(
             query_id_col,
             question_col,
-            F.coalesce("n_sources", F.lit(0)).alias("n_sources"),
-            F.coalesce("context", F.lit("")).alias("context"),
-            llm.fake_llm_summary(
-                llm.user_prompt(F.col(question_col), F.coalesce("context", F.lit("")))
-            ).alias("summary"),
+            F.coalesce("n_blocks", F.lit(0)).alias("n_sources"),
+            context.alias("context"),
+            llm.fake_llm_summary(llm.user_prompt(F.col(question_col), context)).alias(
+                "summary"
+            ),
         )
     )

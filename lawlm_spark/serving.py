@@ -26,6 +26,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pyspark.sql import SparkSession
 
 from lawlm_spark.functions.llm import MAX_CONTEXT_CHARS, fake_llm_summary_py
+from lawlm_spark.localdata import local_rows
 from lawlm_spark.plans.rag import rag_answer
 from lawlm_spark.sources.mirror import mirror_stats, scan_mirror
 
@@ -147,7 +148,7 @@ class RagService:
     def query(self, question: str, limit: int = 3) -> dict:
         """Reference response shape: app.py:362-369."""
         t0 = time.perf_counter()
-        q = self.spark.createDataFrame([(0, question)], "query_id long, question string")
+        q = local_rows(self.spark, [(0, question)], "query_id long, question string")
         opts = dict(self.retriever_opts)
         if (
             self.dense_retriever == "rp_lsh"

@@ -64,7 +64,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from lawlm_spark.streaming.landing import (
-    remove_run_ckpt as _remove_run_ckpt,
+    drain_to_memory as _drain_to_memory,
     write_mtime_pinned_parts,
 )
 
@@ -308,57 +308,37 @@ def _run_enrichment_query(spark, landing: str, ttl_us: int | None,
     NoTimeout operator; an int runs the TTL variant, adding the
     event-time watermark EventTimeTimeout requires (0 s delay — the
     landing parts are time-split, so nothing is late).  Same Arrow
-    local override as run_v41_query (the session's 1024 is tuned for
-    the chunker; this path wants large batches), same try/finally
-    restore.  Pass a list as progress_out to receive per-micro-batch
+    override as run_v41_query (the session's 1024 is tuned for the
+    chunker; this path wants large batches), scoped to the query's
+    start.  Pass a list as progress_out to receive per-micro-batch
     progress dicts (stateOperators metrics — the eviction test reads
     numRowsTotal)."""
-    _ARROW = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    old = spark.conf.get(_ARROW, None)
-    spark.conf.set(_ARROW, "100000")
-    tag = "v72" if ttl_us is None else "v74"
-    sink = f"{tag}_sink_{uuidlib.uuid4().hex[:8]}"
-    try:
-        schema = spark.read.parquet(
-            os.path.join(landing, "part0.parquet")
-        ).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(landing)
-        )
-        if ttl_us is None:
-            enriched = stateful_enrichment(stream)
-        else:
-            stream = stream.withColumn(
-                "ts", F.timestamp_micros(F.col("ts_us"))
-            ).withWatermark("ts", "0 seconds")
-            enriched = stateful_enrichment_ttl(stream, ttl_us)
-        # NO input-sized state partitioning here: applyInPandasWithState
-        # is per-key-Python-dense — see stateful.run_v41_query's
-        # rejection note (r19)
-        q = (
-            enriched.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option(
-                "checkpointLocation",
-                os.path.join(tempfile.gettempdir(), f"ckpt_{sink}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _remove_run_ckpt(sink)
-        if progress_out is not None:
-            progress_out.extend(q.recentProgress)
-    finally:
-        if old is None:
-            spark.conf.unset(_ARROW)
-        else:
-            spark.conf.set(_ARROW, old)
-    return spark.table(sink)
+    from lawlm_spark.session import scoped_conf
+
+    schema = spark.read.parquet(os.path.join(landing, "part0.parquet")).schema
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("latestFirst", "false")
+        .parquet(landing)
+    )
+    if ttl_us is None:
+        enriched = stateful_enrichment(stream)
+    else:
+        stream = stream.withColumn(
+            "ts", F.timestamp_micros(F.col("ts_us"))
+        ).withWatermark("ts", "0 seconds")
+        enriched = stateful_enrichment_ttl(stream, ttl_us)
+    # NO input-sized state partitioning here: applyInPandasWithState
+    # is per-key-Python-dense — see stateful.run_v41_query's
+    # rejection note (r19)
+    q = _drain_to_memory(
+        enriched, "v72" if ttl_us is None else "v74", "append",
+        scoped_conf(spark, {"spark.sql.execution.arrow.maxRecordsPerBatch": "100000"}),
+    )
+    if progress_out is not None:
+        progress_out.extend(q.recentProgress)
+    return spark.table(q.name)
 
 
 def run_v72_query(spark, landing: str, progress_out: list | None = None):

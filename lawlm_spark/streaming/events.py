@@ -26,9 +26,9 @@ from __future__ import annotations
 
 from lawlm_spark.localdata import local_rows
 from lawlm_spark.streaming.landing import (
+    drain_to_memory as _drain_to_memory,
     input_sized_shuffle as _input_sized_shuffle,
     remove_landing as _remove_landing,
-    remove_run_ckpt as _remove_run_ckpt,
 )
 
 import os
@@ -172,23 +172,9 @@ def run_streaming_window_counts(
     )
     stream = normalize_event_time(stream)
     counts = tumbling_window_counts(stream, "ts", group_col, width)
-    sink = f"v14_sink_{uuid.uuid4().hex[:8]}"
     # input-sized state partitioning (r19) — see run_streaming_session_counts
-    with _input_sized_shuffle(spark, path):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option(
-                "checkpointLocation",
-                os.path.join(tempfile.gettempdir(), f"ckpt_{sink}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _remove_run_ckpt(sink)
-    return spark.table(sink)
+    q = _drain_to_memory(counts, "v14", "complete", _input_sized_shuffle(spark, path))
+    return spark.table(q.name)
 
 
 _GAP_UNITS_MICROS = {
@@ -285,27 +271,16 @@ def run_streaming_session_counts(
 
     stream = normalize_event_time(spark.readStream.schema(schema).parquet(landing))
     counts = session_window_counts(stream.withWatermark("ts", "0 seconds"), gap=gap)
-    sink = f"v34_sink_{uuid.uuid4().hex[:8]}"
     # input-sized state partitioning (r19, landing.py::input_sized_shuffle
     # docstring): AQE cannot coalesce a streaming stateful shuffle, so the
     # state partition count is byte-derived from the landing instead of
-    # pinned at defaultParallelism; restored after termination.
-    with _input_sized_shuffle(spark, landing):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(tempfile.gettempdir(), f"ckpt_{sink}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _remove_run_ckpt(sink)
+    # pinned at defaultParallelism; restored once the query has started.
+    q = _drain_to_memory(counts, "v34", "append", _input_sized_shuffle(spark, landing))
     _remove_landing(landing)
     # only the sentinel's session can START after the real max event time
     # (every real session starts at one of its events); filtering on that
     # property keeps all real sessions even for a real user_id of -1
-    return spark.table(sink).filter(F.col("session_start") <= F.lit(max_ts_utc))
+    return spark.table(q.name).filter(F.col("session_start") <= F.lit(max_ts_utc))
 
 
 def run_stream_stream_outer_join(
@@ -399,21 +374,10 @@ def run_stream_stream_outer_join(
         "purchase_ts",
         "click_ts",
     )
-    sink = f"v38_sink_{uuid.uuid4().hex[:8]}"
     # input-sized state partitioning (r19) — see run_streaming_session_counts
-    with _input_sized_shuffle(spark, landing):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(tempfile.gettempdir(), f"ckpt_{sink}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _remove_run_ckpt(sink)
+    q = _drain_to_memory(joined, "v38", "append", _input_sized_shuffle(spark, landing))
     _remove_landing(landing)
-    return spark.table(sink).filter(F.col("purchase_ts") <= F.lit(max_ts_utc))
+    return spark.table(q.name).filter(F.col("purchase_ts") <= F.lit(max_ts_utc))
 
 
 def run_streaming_enriched_counts(
@@ -447,20 +411,9 @@ def run_streaming_enriched_counts(
         .agg(F.count("*").alias("n"), _exact_total_value())
         .select(F.col("w.start").alias("window_start"), "c_mktsegment", "n", "total_value")
     )
-    sink = f"v30_sink_{uuid.uuid4().hex[:8]}"
     # input-sized state partitioning (r19) — see run_streaming_session_counts
-    with _input_sized_shuffle(spark, path):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option("checkpointLocation", os.path.join(tempfile.gettempdir(), f"ckpt_{sink}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _remove_run_ckpt(sink)
-    return spark.table(sink)
+    q = _drain_to_memory(counts, "v30", "complete", _input_sized_shuffle(spark, path))
+    return spark.table(q.name)
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -491,20 +444,12 @@ def run_streaming_dedup(
     deduped = watermarked_dedup(doubled, "ts", "event_id", horizon=horizon).select(
         "event_id", "user_id", "event_type"
     )
-    sink = f"v32_sink_{uuid.uuid4().hex[:8]}"
     # input-sized state partitioning (r19) — see run_streaming_session_counts
-    with _input_sized_shuffle(spark, os.path.join(sf_dir, "events.parquet")):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(tempfile.gettempdir(), f"ckpt_{sink}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _remove_run_ckpt(sink)
-    return spark.table(sink)
+    q = _drain_to_memory(
+        deduped, "v32", "append",
+        _input_sized_shuffle(spark, os.path.join(sf_dir, "events.parquet")),
+    )
+    return spark.table(q.name)
 
 
 def run_streaming_dedup_within_watermark(
@@ -527,20 +472,12 @@ def run_streaming_dedup_within_watermark(
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "event_type")
     )
-    sink = f"v46_sink_{uuid.uuid4().hex[:8]}"
     # input-sized state partitioning (r19) — see run_streaming_session_counts
-    with _input_sized_shuffle(spark, os.path.join(sf_dir, "events.parquet")):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(tempfile.gettempdir(), f"ckpt_{sink}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _remove_run_ckpt(sink)
-    return spark.table(sink)
+    q = _drain_to_memory(
+        deduped, "v46", "append",
+        _input_sized_shuffle(spark, os.path.join(sf_dir, "events.parquet")),
+    )
+    return spark.table(q.name)
 
 
 def run_stream_stream_join(
@@ -582,20 +519,12 @@ def run_stream_stream_join(
         & (F.col("click_ts") <= F.col("purchase_ts"))
         & (F.col("click_ts") >= F.col("purchase_ts") - F.expr(f"INTERVAL {horizon}")),
     ).select("user_id", "purchase_id", "click_id", "purchase_ts", "click_ts")
-    sink = f"v31_sink_{uuid.uuid4().hex[:8]}"
     # input-sized state partitioning (r19) — see run_streaming_session_counts
-    with _input_sized_shuffle(spark, os.path.join(sf_dir, "events.parquet")):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option("checkpointLocation", os.path.join(tempfile.gettempdir(), f"ckpt_{sink}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _remove_run_ckpt(sink)
-    return spark.table(sink)
+    q = _drain_to_memory(
+        joined, "v31", "append",
+        _input_sized_shuffle(spark, os.path.join(sf_dir, "events.parquet")),
+    )
+    return spark.table(q.name)
 
 
 def run_streaming_hll_registers(
@@ -627,23 +556,12 @@ def run_streaming_hll_registers(
         .groupBy("event_type", "bucket")
         .agg(F.max("rho").alias("rho"))
     )
-    sink = f"v54_sink_{uuid.uuid4().hex[:8]}"
     # input-sized state partitioning (r19) — see run_streaming_session_counts
-    with _input_sized_shuffle(spark, os.path.join(sf_dir, "events.parquet")):
-        q = (
-            regs.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option(
-                "checkpointLocation",
-                os.path.join(tempfile.gettempdir(), f"ckpt_{sink}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _remove_run_ckpt(sink)
-    return spark.table(sink)
+    q = _drain_to_memory(
+        regs, "v54", "complete",
+        _input_sized_shuffle(spark, os.path.join(sf_dir, "events.parquet")),
+    )
+    return spark.table(q.name)
 
 
 def run_streaming_windowed_hll(
@@ -673,23 +591,12 @@ def run_streaming_windowed_hll(
         .agg(F.max("rho").alias("rho"))
         .select(F.unix_micros("w.start").alias("win_us"), "bucket", "rho")
     )
-    sink = f"v57_sink_{uuid.uuid4().hex[:8]}"
     # input-sized state partitioning (r19) — see run_streaming_session_counts
-    with _input_sized_shuffle(spark, os.path.join(sf_dir, "events.parquet")):
-        q = (
-            regs.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option(
-                "checkpointLocation",
-                os.path.join(tempfile.gettempdir(), f"ckpt_{sink}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _remove_run_ckpt(sink)
-    return spark.table(sink)
+    q = _drain_to_memory(
+        regs, "v57", "complete",
+        _input_sized_shuffle(spark, os.path.join(sf_dir, "events.parquet")),
+    )
+    return spark.table(q.name)
 
 
 def run_streaming_cms(
@@ -720,23 +627,12 @@ def run_streaming_cms(
         .groupBy(F.col("cell.d").alias("d"), F.col("cell.w").alias("w"))
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    sink = f"v64_sink_{uuid.uuid4().hex[:8]}"
     # input-sized state partitioning (r19) — see run_streaming_session_counts
-    with _input_sized_shuffle(spark, os.path.join(sf_dir, "events.parquet")):
-        q = (
-            agg.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .option(
-                "checkpointLocation",
-                os.path.join(tempfile.gettempdir(), f"ckpt_{sink}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _remove_run_ckpt(sink)
-    return spark.table(sink)
+    q = _drain_to_memory(
+        agg, "v64", "complete",
+        _input_sized_shuffle(spark, os.path.join(sf_dir, "events.parquet")),
+    )
+    return spark.table(q.name)
 
 
 def run_streaming_session_sequences(
@@ -778,24 +674,12 @@ def run_streaming_session_sequences(
             F.transform(F.col("_ev"), lambda e: e["event_type"]).alias("seq"),
         )
     )
-    sink = f"v86_sink_{uuid.uuid4().hex[:8]}"
     # input-sized state partitioning (r19) — see run_streaming_session_counts
-    with _input_sized_shuffle(spark, landing):
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option(
-                "checkpointLocation",
-                os.path.join(tempfile.gettempdir(), f"ckpt_{sink}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    _remove_run_ckpt(sink)
+    q = _drain_to_memory(
+        sessions, "v86", "append", _input_sized_shuffle(spark, landing)
+    )
     _remove_landing(landing)
-    return spark.table(sink).filter(F.col("session_start") <= F.lit(max_ts_utc))
+    return spark.table(q.name).filter(F.col("session_start") <= F.lit(max_ts_utc))
 
 
 def session_bigram_topk(

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from lawlm_spark.localdata import local_rows
 
 from lawlm_spark.plans.rag import EMBED_DIM, ingest_documents
+from lawlm_spark.session import materialize
 from lawlm_spark.sources.mirror import mirror_exists, write_mirror
 
 # near-dup index settings shared by every batch of one ingest pipeline —
@@ -79,8 +80,6 @@ def _neardup_judge_batch(
         drops the whole batch — correct, since everything it produced
         is already in the mirror.
     """
-    from pyspark import StorageLevel
-
     from lawlm_spark.operators.dedup import (
         apply_incremental_near_dup,
         incremental_near_dup_pairs,
@@ -103,8 +102,8 @@ def _neardup_judge_batch(
         min_jaccard=min_jaccard, **_NEARDUP_CFG,
     )
     kept = apply_incremental_near_dup(docs, pairs, id_col)
-    kept = kept.persist(StorageLevel.MEMORY_AND_DISK)
-    kept.count()  # force: snapshot the verdict before any index mutation
+    # force: snapshot the verdict before any index mutation
+    kept, _n = materialize(kept)
 
     def append_index() -> None:
         new_sh, new_bands = near_dup_index(kept, id_col, text_col, **_NEARDUP_CFG)

@@ -14,11 +14,14 @@ One implementation instead of the three copies the r10 review found
 
 from __future__ import annotations
 
+import logging
 import math
 import os
 import shutil
 from concurrent.futures import ThreadPoolExecutor
-from contextlib import contextmanager
+from contextlib import nullcontext
+
+log = logging.getLogger(__name__)
 
 
 def write_mtime_pinned_parts(landing: str, parts: list) -> list[str]:
@@ -83,28 +86,26 @@ def _byte_string_as_bytes(s: str) -> int:
     return int(num) * _SIZE_UNITS[unit]
 
 
-def input_bytes(*paths: str) -> int:
-    """Total on-disk bytes under the given files/directories (recursive,
-    hidden/marker files included — they are a rounding error and this is
-    a sizing heuristic, not an exact accounting)."""
+def input_bytes(spark, *paths: str) -> int:
+    """Total bytes under the given files/directories, sized through the
+    Hadoop FileSystem API (getContentSummary), so local, file://,
+    hdfs:// and s3a:// inputs all size alike.  A missing path logs a
+    warning and counts 0 bytes."""
+    from lawlm_spark.streaming.cdc import _hadoop_fs
+
     total = 0
     for p in paths:
-        if os.path.isfile(p):
-            total += os.path.getsize(p)
+        fs, jpath = _hadoop_fs(spark, p)
+        if not fs.exists(jpath):
+            log.warning("input_bytes: %s does not exist; counted as 0 bytes", p)
             continue
-        for root, _dirs, files in os.walk(p):
-            for f in files:
-                try:
-                    total += os.path.getsize(os.path.join(root, f))
-                except OSError:
-                    pass
+        total += fs.getContentSummary(jpath).getLength()
     return total
 
 
-@contextmanager
 def input_sized_shuffle(spark, *paths: str):
     """Size `spark.sql.shuffle.partitions` from the streaming input's
-    on-disk bytes for the duration of the block:
+    bytes for the duration of the block:
 
         partitions = max(1, ceil(input_bytes / advisoryPartitionSizeInBytes))
 
@@ -123,6 +124,10 @@ def input_sized_shuffle(spark, *paths: str):
     anywhere — the r18 round REJECTED a fixed 32->8 cut precisely
     because it had no data-derived formula; this is that formula.
 
+    An input that sizes to 0 bytes (a mistyped or empty path) is no
+    evidence of a small feed: the block then logs a warning and leaves
+    the session's partition count untouched instead of pinning 1.
+
     SCOPE (measured, r19): JVM-state streaming operators only —
     session_window/tumbling aggregations, stream-stream joins,
     watermarked dedup, sketch aggregations (b_streaming min 3.03-3.13 s
@@ -135,33 +140,55 @@ def input_sized_shuffle(spark, *paths: str):
 
     Results are partition-count independent for every wrapped query
     (hash-certified streaming aggregations/state folds), so this cannot
-    change any query's output.  The conf is set before the stream starts
-    and restored on exit/raise (the run_v41_query Arrow-override
-    pattern).  Single-threaded driver assumption: like
-    operators/tuning.coalesced_shuffles, the set/restore mutates
-    session-level conf — do not run concurrent queries on the same
-    session inside the block (see tuning._SESSION_CONF_LOCK, shared
-    here).
-
-    SPARK_GRAFT_NO_SIZED_STATE=1 disables the policy (A/B measurement
-    and an ops escape hatch)."""
-    if os.environ.get("SPARK_GRAFT_NO_SIZED_STATE", "") == "1":
-        yield
-        return
-    from lawlm_spark.operators.tuning import _SESSION_CONF_LOCK
+    change any query's output.  The set/restore is session.scoped_conf;
+    a stream's conf is cloned at `start()`, so runners end the block
+    there (see drain_to_memory)."""
+    from lawlm_spark.session import scoped_conf
 
     advisory = _byte_string_as_bytes(spark.conf.get(_ADVISORY_KEY, "64MB"))
-    n = max(1, math.ceil(input_bytes(*paths) / advisory))
-    with _SESSION_CONF_LOCK:
-        old = spark.conf.get(_SHUFFLE_KEY, None)
-        spark.conf.set(_SHUFFLE_KEY, str(n))
-        try:
-            yield
-        finally:
-            if old is None:
-                spark.conf.unset(_SHUFFLE_KEY)
-            else:
-                spark.conf.set(_SHUFFLE_KEY, old)
+    n_bytes = input_bytes(spark, *paths)
+    if n_bytes == 0:
+        log.warning(
+            "input_sized_shuffle: %s sized to 0 bytes; keeping the session's "
+            "%s", paths, _SHUFFLE_KEY,
+        )
+        return scoped_conf(spark, {})
+    n = max(1, math.ceil(n_bytes / advisory))
+    log.info("input_sized_shuffle: %d bytes -> %s=%d", n_bytes, _SHUFFLE_KEY, n)
+    return scoped_conf(spark, {_SHUFFLE_KEY: str(n)})
+
+
+def drain_to_memory(df, tag: str, mode: str, scope=None):
+    """Run `df` as an availableNow query into a fresh memory sink named
+    `<tag>_sink_<uuid>` and wait for it to drain; returns the query
+    (`spark.table(q.name)` reads the sink).
+
+    `scope` (a session.scoped_conf block, e.g. input_sized_shuffle; None
+    runs on the session as it is) covers only `start()`: the query
+    clones the session conf there and every micro-batch runs on that
+    clone, so the session values are restored before the await and a
+    hung stream never holds the session-conf lock.  The run's
+    checkpoint is removed once the query terminates (the sink holds
+    the rows)."""
+    import tempfile
+    import uuid
+
+    sink = f"{tag}_sink_{uuid.uuid4().hex[:8]}"
+    with scope or nullcontext():
+        q = (
+            df.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode(mode)
+            .option(
+                "checkpointLocation",
+                os.path.join(tempfile.gettempdir(), f"ckpt_{sink}"),
+            )
+            .trigger(availableNow=True)
+            .start()
+        )
+    q.awaitTermination()
+    remove_run_ckpt(sink)
+    return q
 
 
 def remove_run_ckpt(sink: str) -> None:
@@ -173,7 +200,6 @@ def remove_run_ckpt(sink: str) -> None:
     in r12's quiet runs (NOTES_r12 §5).  Runners with fresh per-run
     uuid sinks call this; tests that deliberately RESTART on a
     checkpoint manage their own paths and never route through it."""
-    import shutil
     import tempfile as _tf
 
     shutil.rmtree(
@@ -189,7 +215,6 @@ def remove_landing(path: str) -> None:
     for landings the caller CREATED for one run; builders that return
     a landing for reuse (profilers, kill-restart tests) leave cleanup
     to their callers."""
-    import shutil
     import tempfile as _tf
 
     real = os.path.realpath(path)

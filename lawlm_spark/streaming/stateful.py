@@ -25,8 +25,8 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from lawlm_spark.localdata import local_rows
 from lawlm_spark.streaming.landing import (
+    drain_to_memory as _drain_to_memory,
     remove_landing as _remove_landing,
-    remove_run_ckpt as _remove_run_ckpt,
 )
 from pyspark.sql.types import (
     DoubleType,
@@ -135,24 +135,11 @@ def run_stateful_running_totals(spark, sf_dir: str):
         .parquet(landing)
     )
     totals = stateful_running_totals(stream.select("user_id", "value"))
-    sink = f"v36_sink_{uuidlib.uuid4().hex[:8]}"
     # NO input-sized state partitioning here: applyInPandasWithState is
     # per-key-Python-dense — see run_v41_query's rejection note (r19)
-    q = (
-        totals.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("update")
-        .option(
-            "checkpointLocation",
-            os.path.join(tempfile.gettempdir(), f"ckpt_{sink}"),
-        )
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    _remove_run_ckpt(sink)
+    q = _drain_to_memory(totals, "v36", "update")
     _remove_landing(landing)
-    return spark.table(sink).select(
+    return spark.table(q.name).select(
         "user_id",
         "n_events",
         F.round("total_value", 4).alias("total_value"),
@@ -415,83 +402,46 @@ def run_v41_query(
     is wrong for this path — 100k-record batches cut the micro-batch
     wall 6.0 -> 4.7 s at sf0.1 (fewer Python-worker roundtrips,
     cheaper state commit).  Values are batch-size independent; the
-    conf is set/restored locally (try/finally — a failed query must
-    not leak the override into the shared session).  Pass None to run
-    at the session's value (the profiler sweeps real batch sizes this
-    way).
+    override is a session.scoped_conf around the query's start (the
+    stream clones the conf there), so a failed query cannot leak it
+    into the shared session.  Pass None to run at the session's value
+    (the profiler sweeps real batch sizes this way).
     """
     import os
-    import tempfile
-    import uuid as uuidlib
 
     from pyspark.sql import functions as F
 
-    _ARROW_CONF = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    # conf.get(key, None) returns None when the key is UNSET (the
-    # explicit default wins over the SQLConf built-in '10000') — so the
-    # unset branch below is live.  Verified empirically on PySpark
-    # 4.1.2 and pinned by tests/test_stateful.py::
-    # test_conf_get_none_default_detects_unset (ADVICE r9 raised the
-    # opposite behavior as a hazard; a Spark upgrade that changes this
-    # fails that test loudly rather than silently pinning '10000').
-    old_arrow = spark.conf.get(_ARROW_CONF, None)
-    if arrow_batch is not None:
-        spark.conf.set(_ARROW_CONF, arrow_batch)
+    from lawlm_spark.session import scoped_conf
 
-    sink = f"v41_sink_{uuidlib.uuid4().hex[:8]}"
-    # the try starts BEFORE any fallible work (the schema read can fail
-    # on a cleaned-up landing dir) — a failure anywhere after the conf
-    # set must restore the session's Arrow batch, not leak the override
-    try:
-        schema = spark.read.parquet(
-            os.path.join(landing, "part0.parquet")
-        ).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .option("latestFirst", "false")
-            .parquet(landing)
-        )
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.col("ts_us"))
-        ).withWatermark("ts", "0 seconds")
-        sessions = stateful_sessions(
-            stream.select("user_id", "ts", "ts_us"), gap_us
-        )
-        # input-sized state partitioning (landing.py::input_sized_shuffle)
-        # was MEASURED AND REJECTED here (r19): byte-sizing collapses this
-        # feed to 1 state partition, which serializes the per-KEY Python
-        # work applyInPandasWithState pays (one function call + one output
-        # frame per key per batch) — query half 6.8 s -> 19-22 s at sf0.1.
-        # Python-state operators are per-byte-CPU-dense, the exact class
-        # the r18 coalescing policy excludes; the JVM-state runners
-        # (events.py) keep the policy, where it measured faster.
-        q = (
-            sessions.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .option(
-                "checkpointLocation",
-                os.path.join(tempfile.gettempdir(), f"ckpt_{sink}"),
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        _remove_run_ckpt(sink)
-        if progress_out is not None:
-            progress_out.extend(q.recentProgress)
-    finally:
-        if arrow_batch is not None:
-            if old_arrow is None:
-                spark.conf.unset(_ARROW_CONF)
-            else:
-                spark.conf.set(_ARROW_CONF, old_arrow)
+    schema = spark.read.parquet(os.path.join(landing, "part0.parquet")).schema
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .option("latestFirst", "false")
+        .parquet(landing)
+    )
+    stream = stream.withColumn(
+        "ts", F.timestamp_micros(F.col("ts_us"))
+    ).withWatermark("ts", "0 seconds")
+    sessions = stateful_sessions(stream.select("user_id", "ts", "ts_us"), gap_us)
+    # input-sized state partitioning (landing.py::input_sized_shuffle)
+    # was MEASURED AND REJECTED here (r19): byte-sizing collapses this
+    # feed to 1 state partition, which serializes the per-KEY Python
+    # work applyInPandasWithState pays (one function call + one output
+    # frame per key per batch) — query half 6.8 s -> 19-22 s at sf0.1.
+    # Python-state operators are per-byte-CPU-dense, the exact class
+    # the r18 coalescing policy excludes; the JVM-state runners
+    # (events.py) keep the policy, where it measured faster.
+    arrow_conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    arrow = {} if arrow_batch is None else {arrow_conf: arrow_batch}
+    q = _drain_to_memory(sessions, "v41", "append", scoped_conf(spark, arrow))
+    if progress_out is not None:
+        progress_out.extend(q.recentProgress)
     if sink_out is not None:
         # the memory-sink temp view holds the full result in the driver
         # for the session lifetime; loop callers (profiler sweeps, bench
         # reps) pass sink_out and dropTempView(name) after their final
         # consuming action — one-shot callers can let the session own it
-        sink_out.append(sink)
+        sink_out.append(q.name)
     # only the sentinel can start a session after the real max event time
-    return spark.table(sink).filter(F.col("session_start") <= max_us)
+    return spark.table(q.name).filter(F.col("session_start") <= max_us)

@@ -215,30 +215,3 @@ def test_cos_micros_py_rejects_ragged_vectors():
 
     with pytest.raises(ValueError, match="equal-length"):
         cos_micros_py([1.0, 2.0, 3.0], [1.0, 2.0])
-
-
-def test_cos_micros_fixed_matches_fold(spark):
-    """The codegen twin (unrolled left-associated sum) must equal the
-    interpreted HOF fold bit-for-bit on float32 and float64 vectors,
-    including zero vectors and -0.0-product edges."""
-    import random
-
-    from lawlm_spark.functions.vectors import cos_micros_fixed
-
-    rng = random.Random(99)
-    vecs = [[rng.uniform(-1, 1) for _ in range(24)] for _ in range(60)]
-    vecs += [[0.0] * 24, [-0.0] * 24, [1e-170] * 24]
-    rows = [(i, vecs[i], vecs[(i * 11 + 5) % len(vecs)]) for i in range(len(vecs))]
-    for t in ("double", "float"):
-        df = spark.createDataFrame(rows, f"i long, a array<{t}>, b array<{t}>")
-        got = df.select(
-            "i",
-            cos_micros(F.col("a"), F.col("b")).alias("fold"),
-            cos_micros_fixed(F.col("a"), F.col("b"), 24).alias("fixed"),
-        ).collect()
-        for r in got:
-            assert r.fold == r.fixed, (t, r.i)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="dim"):
-        cos_micros_fixed(F.col("a"), F.col("b"), 0)

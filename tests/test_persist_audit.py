@@ -41,6 +41,8 @@ UNCONDITIONAL_PRODUCERS = {
     "dsir_select",
     "winnow_pairs",
     "pareto_front",
+    # the one persist -> register -> force helper (session.materialize)
+    "materialize",
 }
 # producer -> flag kwarg that arms its persist
 # (lsh_candidate_pairs' arming flag IS cache_registry: it persists the
@@ -140,3 +142,49 @@ def test_entry_and_bench_call_sites_pass_cache_registry():
         "d74/d78 register/lineage-cut/unpersist pattern): "
         + ", ".join(offenders)
     )
+
+
+def _cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _failing_docs(spark):
+    """Two documents whose text column raises when evaluated."""
+    from pyspark.sql import functions as F
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta " * 8), (2, "epsilon zeta eta " * 8)],
+        "doc_id long, text string",
+    )
+    return docs.withColumn(
+        "text",
+        F.when(F.col("doc_id") > 0, F.raise_error(F.lit("forced failure"))).otherwise(
+            F.col("text")
+        ),
+    )
+
+
+def test_failed_forcing_action_leaves_no_cached_block(spark):
+    """A persist whose forcing count raises must not outlive the call:
+    no block stays cached, and the registered handle is released."""
+    import pytest
+    from pyspark import StorageLevel
+
+    from lawlm_spark.operators.dedup import lsh_candidate_pairs
+    from lawlm_spark.plans.rag import ingest_documents
+
+    none = StorageLevel(False, False, False, False, 1)
+    spark.catalog.clearCache()
+    for call in (
+        lambda reg: ingest_documents(
+            _failing_docs(spark), eager_share=True, cache_registry=reg
+        ),
+        lambda reg: lsh_candidate_pairs(
+            _failing_docs(spark), "doc_id", "text", cache_registry=reg
+        ),
+    ):
+        reg: list = []
+        with pytest.raises(Exception, match="forced failure"):
+            call(reg)
+        assert _cache_is_empty(spark)
+        assert all(h.storageLevel == none for h in reg)

@@ -120,7 +120,7 @@ def test_input_sized_shuffle_formula_and_restore(spark, tmp_path):
     p.mkdir()
     (p / "a.bin").write_bytes(b"x" * 1000)
     (p / "b.bin").write_bytes(b"y" * 500)
-    assert input_bytes(str(p)) == 1500
+    assert input_bytes(spark, str(p)) == 1500
     assert _byte_string_as_bytes("64MB") == 64 * 1024 * 1024
     assert _byte_string_as_bytes("128m") == 128 * 1024 * 1024
     assert _byte_string_as_bytes("1073741824") == 1 << 30
@@ -137,3 +137,59 @@ def test_input_sized_shuffle_formula_and_restore(spark, tmp_path):
     finally:
         spark.conf.unset("spark.sql.adaptive.advisoryPartitionSizeInBytes")
     assert spark.conf.get("spark.sql.shuffle.partitions") == old
+    # a mistyped path sizes to 0 bytes: the session value stays, instead
+    # of silently pinning 1 partition
+    missing = str(tmp_path / "no_such_feed")
+    assert input_bytes(spark, missing) == 0
+    with input_sized_shuffle(spark, missing):
+        assert spark.conf.get("spark.sql.shuffle.partitions") == old
+    assert spark.conf.get("spark.sql.shuffle.partitions") == old
+
+
+def test_stream_releases_conf_lock_at_start(spark, monkeypatch):
+    """A streaming runner's scoped conf ends at start(): while the
+    query awaits termination another thread can enter a scoped block,
+    the session value is already restored, and every micro-batch still
+    runs with the scoped (input-sized) shuffle partitions, because the
+    query cloned the session conf at start()."""
+    import threading
+
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from lawlm_spark.streaming.events import run_streaming_session_counts
+    from tests.conftest import SF_DIR
+
+    key = "spark.sql.shuffle.partitions"
+    session_value = spark.conf.get(key)
+    assert session_value != "1"  # the sf0.001 landing sizes to 1 partition
+    seen = {}
+    real_await = StreamingQuery.awaitTermination
+
+    def await_and_probe(self, timeout=None):
+        entered = threading.Event()
+
+        def other_thread():
+            with coalesced_shuffles(spark):
+                entered.set()
+
+        seen["thread"] = threading.Thread(target=other_thread, daemon=True)
+        seen["thread"].start()
+        seen["entered"] = entered.wait(timeout=30)
+        seen["session_value"] = spark.conf.get(key)
+        out = real_await(self, timeout)
+        seen["progress"] = self.recentProgress
+        return out
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", await_and_probe)
+    run_streaming_session_counts(spark, SF_DIR).count()
+    # joined only after the runner returns: a runner that still held the
+    # lock would otherwise deadlock against the probing thread
+    seen["thread"].join()
+    assert seen["entered"], "another thread was locked out while the stream awaited"
+    assert seen["session_value"] == session_value
+    parts = [
+        op["numShufflePartitions"]
+        for p in seen["progress"]
+        for op in p.get("stateOperators", [])
+    ]
+    assert parts and set(parts) == {1}

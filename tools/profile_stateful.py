@@ -11,8 +11,8 @@ sensitivity (spark.sql.execution.arrow.maxRecordsPerBatch).
 --providers (r10, VERDICT r9 item 3) A/Bs the state-store provider —
 default HDFS-backed vs RocksDB — at the tuned Arrow batch (100k),
 instead of the Arrow sweep.  The provider conf is read at stream
-start, so a runtime conf.set before the query is enough; each run
-uses a fresh checkpoint, so no cross-provider state-format clash.
+start, so a scoped_conf around each run is enough; each run uses
+a fresh checkpoint, so no cross-provider state-format clash.
 
 Prints one JSON document; the NOTES breakdowns are derived from it.
 """
@@ -41,7 +41,7 @@ _PROVIDERS = {
 def profile(sf_dir: str, reps: int, providers: bool = False) -> dict:
     from pyspark.sql import functions as F
 
-    from lawlm_spark.session import get_spark
+    from lawlm_spark.session import get_spark, scoped_conf
     from lawlm_spark.streaming.events import _interval_micros
     from lawlm_spark.streaming.stateful import build_v41_landing, run_v41_query
 
@@ -81,21 +81,20 @@ def profile(sf_dir: str, reps: int, providers: bool = False) -> dict:
     # "arrow_batch_sweep" (r10 review finding)
     sweep_key = "provider_sweep" if providers else "arrow_batch_sweep"
     out[sweep_key] = out.pop("arrow_batch_sweep")
-    prior_provider = spark.conf.get(_PROVIDER_CONF)
     for batch_size in sweep:
-        if providers:
-            spark.conf.set(_PROVIDER_CONF, _PROVIDERS[batch_size])
         runs = []
+        provider = {_PROVIDER_CONF: _PROVIDERS[batch_size]} if providers else {}
         for _ in range(reps):
             progress: list = []
             sinks: list = []
             t0 = time.perf_counter()
-            df = run_v41_query(
-                spark, landing, gap_us, max_us,
-                progress_out=progress,
-                arrow_batch="100000" if providers else batch_size,
-                sink_out=sinks,
-            )
+            with scoped_conf(spark, provider):
+                df = run_v41_query(
+                    spark, landing, gap_us, max_us,
+                    progress_out=progress,
+                    arrow_batch="100000" if providers else batch_size,
+                    sink_out=sinks,
+                )
             n_out = df.count()
             wall = round(time.perf_counter() - t0, 3)
             for s in sinks:
@@ -129,8 +128,6 @@ def profile(sf_dir: str, reps: int, providers: bool = False) -> dict:
             "runs": runs,
         }
         spark.catalog.clearCache()
-    if providers:
-        spark.conf.set(_PROVIDER_CONF, prior_provider)
     spark.stop()
     return out
 
