@@ -148,14 +148,14 @@ def _neardup_pairs_cut(corpus: DataFrame) -> DataFrame:
     d74/d78 pattern applied to the four pre-registered r15 leak sites
     _d5, _d15, _d50_group_split, _d58_cluster_qa (NOTES_r15 §10;
     VERDICT r15 item 2)."""
-    from lawlm_spark.operators.components import _lineage_cut
+    from lawlm_spark.session import lineage_cut
 
     caches: list[DataFrame] = []
     pairs = minhash_dedup_pairs(
         corpus, "doc_id", "text", n=3, num_hashes=8, bands=4,
         min_jaccard=0.2, cache_registry=caches,
     )
-    pairs = _lineage_cut(pairs)
+    pairs = lineage_cut(pairs)
     for c in caches:
         c.unpersist()
     return pairs
@@ -1289,7 +1289,7 @@ _CURATION_CORPUS_SQL = f"""corpus AS (
 
 
 def _d12(spark: SparkSession, sf: str) -> DataFrame:
-    from lawlm_spark.operators.components import _lineage_cut
+    from lawlm_spark.session import lineage_cut
     from lawlm_spark.operators.tuning import coalesced_shuffles
     from lawlm_spark.plans.curation import curate_documents
 
@@ -1308,7 +1308,7 @@ def _d12(spark: SparkSession, sf: str) -> DataFrame:
         # anyway — checkpoint-to-reliable-storage is the documented scale
         # form), then release the exact-dedup + shingle persists the plan
         # held (the d74/d78 cache_registry pattern; VERDICT r15 item 2).
-        out = _lineage_cut(out)
+        out = lineage_cut(out)
     for c in caches:
         c.unpersist()
     return out
@@ -1365,9 +1365,9 @@ def _r1(spark: SparkSession, sf: str) -> DataFrame:
     # production reads the parquet mirror (write_mirror; b_hybrid's
     # shape) — the cut simulates that materialization so the sparse and
     # dense retrieval branches don't each replay the ingest pipeline
-    from lawlm_spark.operators.components import _lineage_cut
+    from lawlm_spark.session import lineage_cut
 
-    chunks, postings = _lineage_cut(chunks), _lineage_cut(postings)
+    chunks, postings = lineage_cut(chunks), lineage_cut(postings)
     return rag_answer(chunks, postings, _queries_df(spark), k=3)
 
 
@@ -1380,9 +1380,9 @@ def _o2_sources(spark: SparkSession, sf: str) -> DataFrame:
     chunks, postings = ingest_documents(docs, chunk_size=256, overlap=32, min_chunk=64)
     # the r1 mirror-materialization cut: retrieval fans chunks into the
     # sparse and dense branches
-    from lawlm_spark.operators.components import _lineage_cut
+    from lawlm_spark.session import lineage_cut
 
-    chunks, postings = _lineage_cut(chunks), _lineage_cut(postings)
+    chunks, postings = lineage_cut(chunks), lineage_cut(postings)
     meta = chunks.withColumns(
         {
             "case_name": F.concat(
@@ -1700,9 +1700,9 @@ def _d20_incremental_neardup(spark: SparkSession, sf: str) -> DataFrame:
     # materialization per corpus.  The lineage cut simulates exactly
     # that here, so the verify/band consumers don't each re-shingle the
     # corpus (part of the 14 FileScans in the r8 plan audit).
-    from lawlm_spark.operators.components import _lineage_cut
+    from lawlm_spark.session import lineage_cut
 
-    sh, bands = _lineage_cut(sh), _lineage_cut(bands)
+    sh, bands = lineage_cut(sh), lineage_cut(bands)
     return incremental_near_dup_pairs(
         new, sh, bands, "doc_id", "text", n=3, num_hashes=8, bands=4, min_jaccard=0.2
     )
@@ -2056,7 +2056,7 @@ def _r7_ivfpq(spark: SparkSession, sf: str) -> DataFrame:
     from lawlm_spark.operators.ivf import assign_cells, ivfpq_topk, seed_ivf_centroids
     from lawlm_spark.operators.pq import encode_pq, seed_codebook
 
-    from lawlm_spark.operators.components import _lineage_cut
+    from lawlm_spark.session import lineage_cut
 
     vecs = load_table(spark, sf, "embeddings")
     cents = seed_ivf_centroids(vecs, nlist=8)
@@ -2066,9 +2066,9 @@ def _r7_ivfpq(spark: SparkSession, sf: str) -> DataFrame:
     # of replaying the corpus encode per consumer (11 FileScans in the
     # r8 plan audit; 5 after — seeds/queries are pushed-down limit
     # scans).
-    indexed = _lineage_cut(assign_cells(vecs, "vec_id", "embedding", cents))
+    indexed = lineage_cut(assign_cells(vecs, "vec_id", "embedding", cents))
     book = seed_codebook(vecs, m=8, k=16, dim=EMB_DIM)
-    codes = _lineage_cut(encode_pq(vecs, book, m=8, dim=EMB_DIM))
+    codes = lineage_cut(encode_pq(vecs, book, m=8, dim=EMB_DIM))
     queries = (
         vecs.orderBy("vec_id")
         .limit(3)
@@ -2639,7 +2639,7 @@ def _d43_curate_with_containment(spark: SparkSession, sf: str) -> DataFrame:
     notions collapse transitively.  Corpus = d12's plus prefix-quote
     docs (+300000): subsets only containment can catch — the oracle is
     d12's chain with the quote rows and the extra edge source."""
-    from lawlm_spark.operators.components import _lineage_cut
+    from lawlm_spark.session import lineage_cut
     from lawlm_spark.operators.dedup import containment_pairs
     from lawlm_spark.plans.curation import curate_documents
 
@@ -2662,7 +2662,7 @@ def _d43_curate_with_containment(spark: SparkSession, sf: str) -> DataFrame:
         extra_pairs_fn=contain, cache_registry=caches,
     )
     # cache_registry pattern (see _d12): materialize, release persists.
-    out = _lineage_cut(out)
+    out = lineage_cut(out)
     for c in caches:
         c.unpersist()
     return out
@@ -4979,7 +4979,7 @@ def _d78_dsir_select(spark: SparkSession, sf: str) -> DataFrame:
     never a corpus-wide window sort.  Scores round(..,6) like the NLL
     family; ranking compares rounded scores with doc_id tiebreak, so
     both engines flag the identical set."""
-    from lawlm_spark.operators.components import _lineage_cut
+    from lawlm_spark.session import lineage_cut
     from lawlm_spark.operators.dsir import dsir_importance, dsir_select
 
     docs = load_table(spark, sf, "documents")
@@ -4993,7 +4993,7 @@ def _d78_dsir_select(spark: SparkSession, sf: str) -> DataFrame:
     # this every invocation leaked a MEMORY_AND_DISK block until
     # session LRU eviction (the ADVICE r9 class d74 fixed; ADVICE r14
     # flagged this call site).
-    flagged = _lineage_cut(flagged)
+    flagged = lineage_cut(flagged)
     for c in caches:
         c.unpersist()
     return flagged
@@ -5166,7 +5166,7 @@ def _d74_winnowing(spark: SparkSession, sf: str) -> DataFrame:
     >= w+k-1 = 13 chars yields >= 1 shared fingerprint.  The oracle
     replays the identical selection — packed (hash, pos) min over the
     same ROWS frame — in SQL."""
-    from lawlm_spark.operators.components import _lineage_cut
+    from lawlm_spark.session import lineage_cut
     from lawlm_spark.operators.fingerprint import winnow_pairs
 
     docs = load_table(spark, sf, "documents")
@@ -5187,7 +5187,7 @@ def _d74_winnowing(spark: SparkSession, sf: str) -> DataFrame:
     # persisted fingerprint frame — without this every invocation
     # leaked a MEMORY_AND_DISK block until session LRU eviction
     # (ADVICE r9), which accumulates across a full-registry sweep.
-    ranked = _lineage_cut(ranked)
+    ranked = lineage_cut(ranked)
     for c in caches:
         c.unpersist()
     return ranked
@@ -5539,14 +5539,14 @@ def _d70_retrieval_metrics(spark: SparkSession, sf: str) -> DataFrame:
     from lawlm_spark.operators.evaluation import retrieval_metrics
     from lawlm_spark.operators.sq import sq8_encode, sq8_topk
 
-    from lawlm_spark.operators.components import _lineage_cut
+    from lawlm_spark.session import lineage_cut
 
     vecs = load_table(spark, sf, "embeddings")
     # the SQ8 code table is the materialized index (the IVF/PQ
     # argument); queries are 3 rows — cuts keep the metric joins from
     # replaying the encode per consumer (6 FileScans in the r8 audit)
-    enc = _lineage_cut(sq8_encode(vecs))
-    q_raw = _lineage_cut(
+    enc = lineage_cut(sq8_encode(vecs))
+    q_raw = lineage_cut(
         vecs.orderBy("vec_id")
         .limit(3)
         .select(F.col("vec_id").alias("qid"), "embedding"),
@@ -5564,7 +5564,7 @@ def _d70_retrieval_metrics(spark: SparkSession, sf: str) -> DataFrame:
     scored = vecs.crossJoin(
         F.broadcast(q_raw.select("qid", F.col("embedding").alias("_qv")))
     ).select("qid", "vec_id", F.round(dot, 6).alias("_dot"))
-    labels = _lineage_cut(
+    labels = lineage_cut(
         top_k(scored, ["qid"], F.col("_dot").desc(), 3, tiebreak=["vec_id"])
     )
     return retrieval_metrics(
@@ -6522,7 +6522,7 @@ def _d21_curate_mix_pack(spark: SparkSession, sf: str) -> DataFrame:
     Every stage deterministic and layout-stable -> end-to-end hash oracle
     (d12's curation SQL + the d17-19 hash fragments + d16b's partitioned
     cumsum, composed)."""
-    from lawlm_spark.operators.components import _lineage_cut
+    from lawlm_spark.session import lineage_cut
     from lawlm_spark.operators.tuning import coalesced_shuffles
     from lawlm_spark.plans.curation import curate_mix_pack
 
@@ -6538,7 +6538,7 @@ def _d21_curate_mix_pack(spark: SparkSession, sf: str) -> DataFrame:
         )
         # cache_registry pattern (see _d12): the packed manifest is narrow
         # (one row per doc, no text) — materialize, release persists.
-        out = _lineage_cut(out)
+        out = lineage_cut(out)
     for c in caches:
         c.unpersist()
     return out

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lawlm_spark.session import lineage_cut
+
 
 def association_rules(
     baskets: DataFrame,
@@ -37,18 +39,14 @@ def association_rules(
     """
     from pyspark.sql import Window
 
-    from lawlm_spark.operators.components import _lineage_cut
-
     # lineage-cut: the distinct basket-item relation feeds FIVE
     # consumers (n_baskets, item_counts x2, both pair sides) — uncut,
     # each replays the corpus scan + distinct (5 FileScans in the r8
     # d63 audit; 1 after).  The FP-growth-prep materialization.
-    reliable = baskets.sparkSession.sparkContext.getCheckpointDir() is not None
-    b = _lineage_cut(
+    b = lineage_cut(
         baskets.select(
             F.col(basket_col).alias("_b"), F.col(item_col).alias("_i")
-        ).distinct(),
-        reliable,
+        ).distinct()
     )
     n_baskets = b.agg(F.count_distinct("_b").alias("_n"))
     item_counts = b.groupBy("_i").agg(F.count(F.lit(1)).alias("_ci"))

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lawlm_spark.session import lineage_cut
+
 
 def line_table(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, idx, line, norm): one row per line, position-stamped."""
@@ -72,13 +74,10 @@ def remove_boilerplate_lines(
     survive with empty text (left join back to the id set), so the
     output has exactly one row per input document.
     """
-    from lawlm_spark.operators.components import _lineage_cut
-
     # the docstring's own advice, applied: persist the line table once —
     # it feeds the frequency aggregate AND the removal anti-join, and
     # uncut each replays the corpus explode (r8 d23 audit)
-    reliable = docs.sparkSession.sparkContext.getCheckpointDir() is not None
-    lt = _lineage_cut(line_table(docs, id_col, text_col), reliable)
+    lt = lineage_cut(line_table(docs, id_col, text_col))
     boiler = boilerplate_lines(
         docs, id_col, text_col, max_doc_frac, min_docs, lt=lt
     ).select("norm")

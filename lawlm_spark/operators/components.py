@@ -17,14 +17,9 @@ where plain propagation needs 25).
 
 Two hard-won Spark lessons baked in (found by the property test
 against a union-find reference):
-  - `localCheckpoint(eager=True)` per round, NOT persist: caching keeps
-    data but the LOGICAL plan still nests one join per round, and
-    analyzer/optimizer time grows superlinearly with plan depth —
-    rounds get slower and slower.  Checkpointing truncates lineage so
-    every round's plan is constant-size.  At 100 TB pass
-    use_reliable_checkpoint=True (or set a session checkpoint dir, which
-    flips the default) for reliable `checkpoint()` (HDFS/object store) —
-    localCheckpoint dies with an executor.
+  - a lineage cut per round (session.lineage_cut), NOT persist — the
+    rationale lives on that helper.  At 100 TB set a session checkpoint
+    dir so the cuts are reliable `checkpoint()`s (HDFS/object store).
   - plain one-hop propagation needs graph-diameter rounds; max_iter
     would silently truncate long chains.  Pointer jumping makes
     max_iter=20 enough for any graph up to ~2^20 diameter.
@@ -40,19 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _lineage_cut(df: DataFrame, reliable: bool | None = None) -> DataFrame:
-    """Truncate lineage: reliable `checkpoint()` (HDFS/object store —
-    survives executor loss, the 100 TB path) when the session has a
-    checkpoint dir set, else `localCheckpoint` (fast, local[32] path).
-
-    reliable=None (the default, r9) derives the policy from the session
-    itself — callers that don't need to cache the probe should omit the
-    argument so a configured checkpoint dir is never silently ignored
-    (the ADVICE r8 entry-call-site class)."""
-    if reliable is None:
-        reliable = df.sparkSession.sparkContext.getCheckpointDir() is not None
-    return df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
+from lawlm_spark.session import lineage_cut
 
 
 def connected_components(
@@ -60,7 +43,6 @@ def connected_components(
     src_col: str = "id_a",
     dst_col: str = "id_b",
     max_iter: int = 20,
-    use_reliable_checkpoint: bool | None = None,
 ) -> DataFrame:
     """(node, component_id): min reachable node id over undirected pairs.
 
@@ -69,13 +51,8 @@ def connected_components(
     node set downstream if every node needs a label (dedup_by_component
     does).  The returned frame is checkpoint-materialized: small
     (one row per edge-touched node), lineage-free, nothing to unpersist.
-
-    use_reliable_checkpoint: True → per-round `df.checkpoint()` against
-    the session's checkpoint dir (set via
-    `spark.sparkContext.setCheckpointDir`) so a lost executor cannot
-    lose round state at scale; False → `localCheckpoint` (local fast
-    path); None (default) → reliable iff the session has a checkpoint
-    dir configured.
+    Each round is lineage-cut (session.lineage_cut: reliable iff the
+    session has a checkpoint dir).
 
     Raises RuntimeError if max_iter rounds pass without convergence —
     partially-propagated labels would silently under-deduplicate
@@ -83,9 +60,6 @@ def connected_components(
     graph up to ~2^20 diameter, so hitting this means something is wrong.
     """
     spark = pairs.sparkSession
-    if use_reliable_checkpoint is None:
-        use_reliable_checkpoint = spark.sparkContext.getCheckpointDir() is not None
-    reliable = bool(use_reliable_checkpoint)
     # Byte-sized reduce partitions for the iteration (r18,
     # operators/tuning.py): every round's shuffle is label-table-sized
     # (one row per edge-touched node), the cheap-per-byte profile the
@@ -94,79 +68,66 @@ def connected_components(
     from lawlm_spark.operators.tuning import coalesced_shuffles
 
     with coalesced_shuffles(spark):
-        return _components_loop(pairs, src_col, dst_col, max_iter, reliable)
-
-
-def _components_loop(
-    pairs: DataFrame,
-    src_col: str,
-    dst_col: str,
-    max_iter: int,
-    reliable: bool,
-) -> DataFrame:
-    edges = _lineage_cut(
-        pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
-        .union(pairs.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
-        .distinct(),
-        reliable,
-    )
-    labels = _lineage_cut(
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("component_id", F.col("node")),
-        reliable,
-    )
-    changed = 0
-    for _ in range(max_iter):
-        # (a)+(b): min label over self and neighbors.  The previous
-        # label rides along as `_old` (r18): the convergence check then
-        # counts new != _old over the CHECKPOINTED round output — a
-        # single cached-partition scan — instead of re-joining the
-        # round's output back to the previous labels (one fewer
-        # join+shuffle job per round; same count by construction).
-        neighbor_lbls = (
-            edges.join(labels, edges.dst == labels.node)
-            .select(edges.src.alias("node"), "component_id")
+        edges = lineage_cut(
+            pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
+            .union(pairs.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
+            .distinct()
         )
-        cand = (
-            labels.select("node", "component_id")
-            .union(neighbor_lbls)
-            .groupBy("node")
-            .agg(F.min("component_id").alias("component_id"))
+        labels = lineage_cut(
+            edges.select(F.col("src").alias("node"))
+            .distinct()
+            .withColumn("component_id", F.col("node"))
         )
-        # (c): pointer jump — follow my label's label.  Labels only
-        # decrease and every label IS a node, so the lookup hits.
-        lbl_of_lbl = cand.select(
-            F.col("node").alias("_lnode"), F.col("component_id").alias("_lcid")
-        )
-        prev = labels.select(
-            F.col("node").alias("_pnode"), F.col("component_id").alias("_old")
-        )
-        jumped = _lineage_cut(
-            cand.join(lbl_of_lbl, cand.component_id == F.col("_lnode"), "left")
-            .join(prev, cand.node == F.col("_pnode"))
-            .select(
-                "node",
-                F.least(
-                    F.col("component_id"), F.coalesce("_lcid", F.col("component_id"))
-                ).alias("component_id"),
-                "_old",
-            ),
-            reliable,
-        )
-        changed = jumped.filter(
-            F.col("component_id") != F.col("_old")
-        ).count()
-        labels = jumped.select("node", "component_id")
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing); returning partial labels "
-            "would silently under-deduplicate — raise max_iter"
-        )
-    return labels
+        changed = 0
+        for _ in range(max_iter):
+            # (a)+(b): min label over self and neighbors.  The previous
+            # label rides along as `_old` (r18): the convergence check then
+            # counts new != _old over the CHECKPOINTED round output — a
+            # single cached-partition scan — instead of re-joining the
+            # round's output back to the previous labels (one fewer
+            # join+shuffle job per round; same count by construction).
+            neighbor_lbls = (
+                edges.join(labels, edges.dst == labels.node)
+                .select(edges.src.alias("node"), "component_id")
+            )
+            cand = (
+                labels.select("node", "component_id")
+                .union(neighbor_lbls)
+                .groupBy("node")
+                .agg(F.min("component_id").alias("component_id"))
+            )
+            # (c): pointer jump — follow my label's label.  Labels only
+            # decrease and every label IS a node, so the lookup hits.
+            lbl_of_lbl = cand.select(
+                F.col("node").alias("_lnode"), F.col("component_id").alias("_lcid")
+            )
+            prev = labels.select(
+                F.col("node").alias("_pnode"), F.col("component_id").alias("_old")
+            )
+            jumped = lineage_cut(
+                cand.join(lbl_of_lbl, cand.component_id == F.col("_lnode"), "left")
+                .join(prev, cand.node == F.col("_pnode"))
+                .select(
+                    "node",
+                    F.least(
+                        F.col("component_id"), F.coalesce("_lcid", F.col("component_id"))
+                    ).alias("component_id"),
+                    "_old",
+                )
+            )
+            changed = jumped.filter(
+                F.col("component_id") != F.col("_old")
+            ).count()
+            labels = jumped.select("node", "component_id")
+            if changed == 0:
+                break
+        if changed != 0:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds "
+                f"({changed} labels still changing); returning partial labels "
+                "would silently under-deduplicate — raise max_iter"
+            )
+        return labels
 
 
 def dedup_by_component(
@@ -212,15 +173,13 @@ def component_quality(
     # upstream pair-producing pipeline — for minhash-derived pairs that
     # re-runs shingling/banding once per consumer (8 FileScans in the
     # r8 d58 audit; 2 after).  Pair-set-sized, the graph-op policy.
-    reliable = pairs.sparkSession.sparkContext.getCheckpointDir() is not None
-    edges = _lineage_cut(
+    edges = lineage_cut(
         pairs.select(
             F.least(src_col, dst_col).alias("a"),
             F.greatest(src_col, dst_col).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
-        .distinct(),
-        reliable,
+        .distinct()
     )
     comp = connected_components(edges, "a", "b")
     labeled = edges.join(comp, edges.a == comp.node).select(

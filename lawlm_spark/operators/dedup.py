@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from lawlm_spark.functions.text import fingerprint, shingles
 from lawlm_spark.functions.vectors import cosine
-from lawlm_spark.session import materialize
+from lawlm_spark.session import lineage_cut, materialize
 
 
 # ---------------------------------------------------------------------------
@@ -80,15 +80,10 @@ def jaccard_pairs(
     Self-equi-join on shingle -> |A∩B| counts; |A∪B| from the carried set
     sizes.  At scale, gate with `lsh_candidate_pairs` first.
     """
-    from lawlm_spark.operators.components import _lineage_cut
-
     # the shingle table feeds both self-join sides — cut so the corpus
     # is shingled once, not once per side (the minhash_dedup_pairs
     # persist policy, via checkpoint)
-    sh = _lineage_cut(
-        shingle_table(docs, id_col, text_col, n),
-        docs.sparkSession.sparkContext.getCheckpointDir() is not None,
-    )
+    sh = lineage_cut(shingle_table(docs, id_col, text_col, n))
     a = sh.select(
         F.col(id_col).alias("id_a"), F.col("shingle"), F.col("set_size").alias("size_a")
     )
@@ -457,6 +452,23 @@ def near_dup_index(
     return sh, band_table(sig, id_col, num_hashes, bands)
 
 
+def _cut_near_dup_index(
+    docs: DataFrame, id_col: str, text_col: str, n: int, num_hashes: int, bands: int
+) -> tuple[DataFrame, DataFrame]:
+    """near_dup_index's (shingles, bands) for `docs`, each lineage-cut.
+
+    A batch's shingles feed the signature chain AND the verify union,
+    its bands both the probe side and the within-batch peer side —
+    uncut, each consumer re-shingles the batch (part of the 14
+    FileScans in the r8 d20 audit).  Both tables are per-document and
+    deterministic, so the rows of any id subset equal near_dup_index
+    over that subset: the streaming judge appends its survivors' rows
+    from here instead of shingling and signing them again."""
+    sh = lineage_cut(shingle_table(docs, id_col, text_col, n))
+    sig = signatures_from_shingles(sh, id_col, num_hashes)
+    return sh, lineage_cut(band_table(sig, id_col, num_hashes, bands))
+
+
 def incremental_near_dup_pairs(
     new_docs: DataFrame,
     index_shingles: DataFrame,
@@ -487,19 +499,26 @@ def incremental_near_dup_pairs(
     matches report only (a, b<a) so a batch dedups against itself the
     same keep-first way minhash_dedup_pairs does.
     """
-    from lawlm_spark.operators.components import _lineage_cut
-
-    # lineage-cut the BATCH-side tables (batch-sized, cheap by the
-    # O(batch) contract): new_sh feeds the signature chain AND the
-    # verify union, new_bands feeds both the probe side and the
-    # within-batch peer side — uncut, each consumer re-shingles the
-    # batch (part of the 14 FileScans in the r8 d20 audit).
-    reliable = new_docs.sparkSession.sparkContext.getCheckpointDir() is not None
-    new_sh = _lineage_cut(shingle_table(new_docs, id_col, text_col, n), reliable)
-    new_sig = signatures_from_shingles(new_sh, id_col, num_hashes)
-    new_bands = _lineage_cut(
-        band_table(new_sig, id_col, num_hashes, bands), reliable
+    new_sh, new_bands = _cut_near_dup_index(
+        new_docs, id_col, text_col, n, num_hashes, bands
     )
+    return _pairs_against_index(
+        new_sh, new_bands, index_shingles, index_bands, id_col, min_jaccard,
+        broadcast_new,
+    )
+
+
+def _pairs_against_index(
+    new_sh: DataFrame,
+    new_bands: DataFrame,
+    index_shingles: DataFrame,
+    index_bands: DataFrame,
+    id_col: str,
+    min_jaccard: float,
+    broadcast_new: bool = True,
+) -> DataFrame:
+    """incremental_near_dup_pairs over a batch's already-built (cut)
+    index rows."""
     a = new_bands.select(F.col(id_col).alias("id_new"), "band", "band_key")
     if broadcast_new:
         a = F.broadcast(a)
@@ -556,15 +575,10 @@ def containment_pairs(
     high-containment/low-Jaccard pair needs either a lower LSH
     threshold or the exact path on a blocked subset.
     """
-    from lawlm_spark.operators.components import _lineage_cut
-
     # the shingle table feeds both self-join sides — cut so the corpus
     # is shingled once, not once per side (the minhash_dedup_pairs
     # persist policy, via checkpoint)
-    sh = _lineage_cut(
-        shingle_table(docs, id_col, text_col, n),
-        docs.sparkSession.sparkContext.getCheckpointDir() is not None,
-    )
+    sh = lineage_cut(shingle_table(docs, id_col, text_col, n))
     a = sh.select(
         F.col(id_col).alias("id_a"), F.col("shingle"), F.col("set_size").alias("size_a")
     )

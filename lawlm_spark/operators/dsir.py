@@ -57,7 +57,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from lawlm_spark.functions.text import let_bound, tokenize
-from lawlm_spark.operators.components import _lineage_cut
+from lawlm_spark.session import lineage_cut
 
 
 def hashed_ngram_occurrences(
@@ -133,7 +133,7 @@ def dsir_importance(
         salt,
         extra_cols=("_tgt",),
     )
-    counts = _lineage_cut(
+    counts = lineage_cut(
         occ.groupBy("bucket").agg(
             F.count("*").alias("cr"),
             F.sum(F.when(F.col("_tgt"), 1).otherwise(0)).alias("ct"),

@@ -15,8 +15,8 @@ not a claimed fixed point (callers wanting stability run components on
 the high-agreement edges instead).
 
 One shuffle per round (neighbor-label delivery + the (node, label)
-count share a key chain), labels lineage-cut per round via the
-components.py checkpoint policy.  The oracle unrolls the rounds as
+count share a key chain), labels lineage-cut per round
+(session.lineage_cut).  The oracle unrolls the rounds as
 chained CTEs — every step is counts + argmax, pure SQL.
 """
 
@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lawlm_spark.operators.components import _lineage_cut
+from lawlm_spark.session import lineage_cut
 
 
 def label_propagation(
@@ -33,31 +33,26 @@ def label_propagation(
     src_col: str = "id_a",
     dst_col: str = "id_b",
     iterations: int = 3,
-    use_reliable_checkpoint: bool | None = None,
 ) -> DataFrame:
     """(node, label) after `iterations` synchronous rounds."""
     spark = pairs.sparkSession
-    if use_reliable_checkpoint is None:
-        use_reliable_checkpoint = spark.sparkContext.getCheckpointDir() is not None
-    reliable = bool(use_reliable_checkpoint)
     # Byte-sized reduce partitions for the iteration (r18, same policy
     # and rationale as connected_components — label-table-sized rounds,
     # cheap per byte, materialized via per-round cuts).
     from lawlm_spark.operators.tuning import coalesced_shuffles
 
     with coalesced_shuffles(spark):
-        edges = _lineage_cut(
+        edges = lineage_cut(
             pairs.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
             .union(pairs.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
             .filter(F.col("src") != F.col("dst"))
-            .distinct(),
-            reliable,
+            .distinct()
         )
         labels = edges.select(F.col("src").alias("node")).distinct().withColumn(
             "label", F.col("node")
         )
         for _ in range(iterations):
-            labels = _lineage_cut(lpa_round(edges, labels), reliable)
+            labels = lineage_cut(lpa_round(edges, labels))
     return labels
 
 
@@ -122,8 +117,7 @@ def modularity_contributions(
     # source is scanned once per aggregate (8 FileScans in the r8 d68
     # audit; 2 after the cut).  Edge-sized, same policy as the LPA
     # rounds above.
-    reliable = pairs.sparkSession.sparkContext.getCheckpointDir() is not None
-    tagged = _lineage_cut(edges.join(la, "a").join(lb, "b"), reliable)
+    tagged = lineage_cut(edges.join(la, "a").join(lb, "b"))
     m = tagged.agg(F.count(F.lit(1)).alias("_m"))
     e_in = (
         tagged.filter(F.col("_la") == F.col("_lb"))

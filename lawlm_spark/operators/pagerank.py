@@ -25,13 +25,12 @@ Scale design (the 1000-executor question): each round is ONE shuffle —
 the contribution join partitions by src (ranks and outdeg share that
 key), the inflow aggregate by dst.  The dangling mass is a 1-row
 aggregate joined back as a broadcast singleton (no driver-side
-collect inside the loop).  Per-round `localCheckpoint` /
-`checkpoint` truncates lineage exactly like
-operators/components.py:44 — without it the logical plan nests one
-join per round and analyzer time grows superlinearly.  Ranks are one
-row per node (tiny next to the edge table), so the iteration state
-that must survive executor loss is small; at 100 TB set a session
-checkpoint dir to flip the default to reliable checkpoints.
+collect inside the loop).  Each round is lineage-cut
+(session.lineage_cut) — without it the logical plan nests one join per
+round and analyzer time grows superlinearly.  Ranks are one row per
+node (tiny next to the edge table), so the iteration state that must
+survive executor loss is small; at 100 TB set a session checkpoint dir
+so the cuts are reliable checkpoints.
 
 Reference parity: the reference engine has no graph operator family —
 this is part of the beyond-reference training-data surface (link-based
@@ -44,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from lawlm_spark.operators.components import _lineage_cut
+from lawlm_spark.session import lineage_cut
 
 RANK_SCALE = 10**12
 
@@ -56,7 +55,6 @@ def pagerank(
     iterations: int = 6,
     damping_num: int = 85,
     scale: int = RANK_SCALE,
-    use_reliable_checkpoint: bool | None = None,
 ) -> DataFrame:
     """(node, rank): fixed-iteration PageRank in BIGINT micro-units.
 
@@ -68,10 +66,6 @@ def pagerank(
     checkpoint-materialized (lineage-free).
     """
     spark = edges.sparkSession
-    if use_reliable_checkpoint is None:
-        use_reliable_checkpoint = spark.sparkContext.getCheckpointDir() is not None
-    reliable = bool(use_reliable_checkpoint)
-
     # Byte-sized reduce partitions for the whole iteration (r18,
     # operators/tuning.py): every per-round shuffle is rank-table-sized,
     # so coalescing by the advisory size instead of the core count cuts
@@ -81,55 +75,37 @@ def pagerank(
     from lawlm_spark.operators.tuning import coalesced_shuffles
 
     with coalesced_shuffles(spark):
-        return _pagerank_loop(
-            edges, src_col, dst_col, iterations, damping_num, scale, reliable
+        e = lineage_cut(
+            edges.select(
+                F.col(src_col).cast("string").alias("src"),
+                F.col(dst_col).cast("string").alias("dst"),
+            ).distinct()
         )
-
-
-def _pagerank_loop(
-    edges: DataFrame,
-    src_col: str,
-    dst_col: str,
-    iterations: int,
-    damping_num: int,
-    scale: int,
-    reliable: bool,
-) -> DataFrame:
-    e = _lineage_cut(
-        edges.select(
-            F.col(src_col).cast("string").alias("src"),
-            F.col(dst_col).cast("string").alias("dst"),
-        ).distinct(),
-        reliable,
-    )
-    # Fused setup (r18): (node, outdeg) in ONE materialization — the
-    # outdeg aggregate (all src nodes) FULL OUTER the distinct dst
-    # nodes is exactly nodes⟕outdeg (src-only → its count, dst-only →
-    # NULL = dangling, both → count), without materializing the
-    # separate nodes and outdeg tables first.  3 setup job barriers
-    # instead of 5, one less pass over e at any scale.
-    state = _lineage_cut(
-        e.groupBy(F.col("src").alias("node"))
-        .agg(F.count("*").alias("outdeg"))
-        .join(e.select(F.col("dst").alias("node")).distinct(), "node", "full"),
-        reliable,
-    )
-    # N is a setup-time scalar (one action, like components' convergence
-    # count) — it parameterizes the integer formula as a literal; state
-    # has one row per node, so its count IS the node count (cheap: the
-    # frame is already cut/materialized).
-    n = state.count()
-    # the iterated state CARRIES outdeg (null = dangling): this removes
-    # two joins from every round — the ranks⋈outdeg re-key and the
-    # dangling anti-join both collapse into filters on the carried
-    # column (r7 plan optimization; measured in NOTES_r07).  The initial
-    # rank is a literal projection over the cut frame (no extra job).
-    state = state.withColumn("rank", F.lit(scale // n))
-    for _ in range(iterations):
-        state = _lineage_cut(
-            pagerank_round(state, e, n, damping_num, scale), reliable
+        # Fused setup (r18): (node, outdeg) in ONE materialization — the
+        # outdeg aggregate (all src nodes) FULL OUTER the distinct dst
+        # nodes is exactly nodes⟕outdeg (src-only → its count, dst-only →
+        # NULL = dangling, both → count), without materializing the
+        # separate nodes and outdeg tables first.  3 setup job barriers
+        # instead of 5, one less pass over e at any scale.
+        state = lineage_cut(
+            e.groupBy(F.col("src").alias("node"))
+            .agg(F.count("*").alias("outdeg"))
+            .join(e.select(F.col("dst").alias("node")).distinct(), "node", "full")
         )
-    return state.select("node", "rank")
+        # N is a setup-time scalar (one action, like components' convergence
+        # count) — it parameterizes the integer formula as a literal; state
+        # has one row per node, so its count IS the node count (cheap: the
+        # frame is already cut/materialized).
+        n = state.count()
+        # the iterated state CARRIES outdeg (null = dangling): this removes
+        # two joins from every round — the ranks⋈outdeg re-key and the
+        # dangling anti-join both collapse into filters on the carried
+        # column (r7 plan optimization; measured in NOTES_r07).  The initial
+        # rank is a literal projection over the cut frame (no extra job).
+        state = state.withColumn("rank", F.lit(scale // n))
+        for _ in range(iterations):
+            state = lineage_cut(pagerank_round(state, e, n, damping_num, scale))
+        return state.select("node", "rank")
 
 
 def pagerank_round(

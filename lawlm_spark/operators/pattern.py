@@ -530,16 +530,25 @@ def _map_groups_sorted(runs: DataFrame, key_col: str, append_group,
     A key's rows can still straddle adjacent Arrow batches
     (maxRecordsPerBatch cuts a partition arbitrarily), so each batch's
     trailing key-block is carried into the next batch and flushed at
-    partition end.  `append_group(group_pdf, cols)` receives one key's
-    rows (run_id-sorted) and appends output cells to the `cols` lists.
+    partition end.  The carry is a list of frames concatenated once,
+    when its key ends, so a key spanning many batches costs linear, not
+    quadratic, copying.  Key comparisons treat two nulls as equal: a
+    null key is one group, as in Spark's window partitioning (Arrow
+    hands a nullable long key over as float64, where NaN != NaN).
+    `append_group(group_pdf, cols)` receives one key's rows
+    (run_id-sorted) and appends output cells to the `cols` lists.
     """
     import numpy as np
     import pandas as pd
 
+    def _differs(a, b):
+        na, nb = pd.isna(a), pd.isna(b)
+        return np.where(na | nb, na != nb, a != b)
+
     def _emit(block: "pd.DataFrame"):
         cols: dict[str, list] = {name: [] for name, _ in out_dtypes}
         kv = block[key_col].to_numpy()
-        cuts = np.flatnonzero(kv[1:] != kv[:-1]) + 1
+        cuts = np.flatnonzero(_differs(kv[1:], kv[:-1])) + 1
         starts = np.concatenate(([0], cuts))
         ends = np.concatenate((cuts, [len(kv)]))
         for s, e in zip(starts, ends):
@@ -557,26 +566,29 @@ def _map_groups_sorted(runs: DataFrame, key_col: str, append_group,
             }
         )
 
+    def _flush(frames: list):
+        return _emit(
+            frames[0] if len(frames) == 1 else pd.concat(frames, ignore_index=True)
+        )
+
     def _map(batches):
-        carry = None
+        carry: list = []  # frames of one key, the last one seen
         for pdf in batches:
-            if carry is not None:
-                pdf = pd.concat([carry, pdf], ignore_index=True)
-                carry = None
             if not len(pdf):
                 continue
             kv = pdf[key_col].to_numpy()
             # keys are contiguous: the trailing equal-run starts right
             # after the last row belonging to any OTHER key
-            other = np.flatnonzero(kv != kv[-1])
+            other = np.flatnonzero(_differs(kv, kv[-1]))
             cut = int(other[-1]) + 1 if len(other) else 0
-            if cut:
-                out = _emit(pdf.iloc[:cut])
+            if cut or (carry and _differs(carry[-1][key_col].iat[0], kv[-1])):
+                out = _flush(carry + ([pdf.iloc[:cut]] if cut else []))
                 if out is not None:
                     yield out
-            carry = pdf.iloc[cut:]
-        if carry is not None and len(carry):
-            out = _emit(carry)
+                carry = []
+            carry.append(pdf.iloc[cut:])
+        if carry:
+            out = _flush(carry)
             if out is not None:
                 yield out
 

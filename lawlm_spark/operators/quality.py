@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 
 from lawlm_spark.functions.text import let_bound, tokenize
 from lawlm_spark.operators.dedup import shingle_table
+from lawlm_spark.session import lineage_cut
 
 
 def _nonempty_lines(col) -> "F.Column":
@@ -220,18 +221,13 @@ def unigram_nll(
     token stream on its key, and the final per-doc aggregate shuffles
     on id.  Docs with zero tokens report (0, 0.0).
     """
-    from lawlm_spark.operators.components import _lineage_cut
-
     toks = docs.select(F.col(id_col), F.explode(tokenize(F.col(text_col))).alias("token"))
     # lineage-cut the token-count table (distinct-token-sized): vocab
     # and the N scalar both derive from it, and uncut each consumer
     # replays the corpus explode (5 FileScans in the r8 d31 audit; the
     # scoring join is the only remaining corpus pass).  N = sum of all
     # token counts — identical to count(*) over the stream.
-    reliable = docs.sparkSession.sparkContext.getCheckpointDir() is not None
-    counts = _lineage_cut(
-        toks.groupBy("token").agg(F.count("*").alias("c")), reliable
-    )
+    counts = lineage_cut(toks.groupBy("token").agg(F.count("*").alias("c")))
     # orderBy+limit plans TakeOrderedAndProject (per-partition partial
     # top-V + merge), not a one-partition global window sort
     vocab = counts.orderBy(F.col("c").desc(), F.col("token")).limit(vocab_size)
@@ -309,18 +305,13 @@ def bigram_nll(
     count tables join the stream on their own keys; (N, V') ride as a
     broadcast singleton.  No driver-side collect anywhere.
     """
-    from lawlm_spark.operators.components import _lineage_cut
-
-    reliable = docs.sparkSession.sparkContext.getCheckpointDir() is not None
     toks = docs.select(
         F.col(id_col),
         F.posexplode(tokenize(F.col(text_col))).alias("pos", "token"),
     )
     # same cut policy as unigram_nll: the token-count table serves
     # vocab once instead of replaying the corpus explode per consumer
-    counts = _lineage_cut(
-        toks.groupBy("token").agg(F.count("*").alias("c")), reliable
-    )
+    counts = lineage_cut(toks.groupBy("token").agg(F.count("*").alias("c")))
     vocab = counts.orderBy(F.col("c").desc(), F.col("token")).limit(vocab_size)
     # lineage-cut the mapped token stream (narrow: id, pos, class):
     # uncut it fans into the unigram table AND both bigram consumers,
@@ -328,7 +319,7 @@ def bigram_nll(
     # the r8 d40 audit; 1 corpus pass after).  The derived tables below
     # re-aggregate it: N = sum(c_uni); c_ctx(prev) = sum over cur of
     # c_bi — identical integers by construction.
-    mapped = _lineage_cut(
+    mapped = lineage_cut(
         toks.join(vocab.select("token", F.lit(1).alias("_inv")), "token", "left")
         .select(
             id_col,
@@ -336,8 +327,7 @@ def bigram_nll(
             F.when(F.col("_inv").isNotNull(), F.col("token"))
             .otherwise(F.lit("<unk>"))
             .alias("tok_m"),
-        ),
-        reliable,
+        )
     )
     uni = mapped.groupBy("tok_m").agg(F.count("*").alias("c_uni"))
     scalars = uni.groupBy().agg(

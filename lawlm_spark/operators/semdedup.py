@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 
 from lawlm_spark.functions.vectors import cosine, dot, norm
 from lawlm_spark.operators.pq import encode_pq, seed_codebook
+from lawlm_spark.session import lineage_cut
 
 
 def _ranked_clusters(
@@ -96,18 +97,6 @@ def _ranked_clusters(
     return scored.withColumn("rk", F.row_number().over(w)).withColumn(
         "_norm", norm(F.col("_vec"))
     )
-
-
-def _cut(ranked: DataFrame) -> DataFrame:
-    """Lineage-cut the ranked-cluster table (the graph-op policy): it
-    fans into both pair sides (and the kept-set anti-join) — uncut,
-    each branch replays the encode+rank over the corpus (12 FileScans
-    in the r8 d38 audit; 1 after).  Corpus-row-sized but narrow
-    (id, cluster, cos, vec, norm)."""
-    from lawlm_spark.operators.components import _lineage_cut
-
-    reliable = ranked.sparkSession.sparkContext.getCheckpointDir() is not None
-    return _lineage_cut(ranked, reliable)
 
 
 def _subsplit(
@@ -226,7 +215,13 @@ def semdedup_pairs(
     join — cross-cluster pairs are never generated.  `max_cluster_size`
     arms the hot-cluster guard (module docstring): oversized clusters'
     pair scope narrows to (cluster, rp-LSH sub-bucket)."""
-    ranked = _cut(_ranked_clusters(vecs, id_col, vec_col, n_clusters, dim, codebook))
+    # lineage-cut the ranked-cluster table: it fans into both pair sides
+    # (and semdedup's kept-set anti-join) — uncut, each branch replays
+    # the encode+rank over the corpus (12 FileScans in the r8 d38 audit;
+    # 1 after).  Corpus-row-sized but narrow (id, cluster, cos, vec, norm).
+    ranked = lineage_cut(
+        _ranked_clusters(vecs, id_col, vec_col, n_clusters, dim, codebook)
+    )
     return _pairs_from_ranked(
         ranked, id_col, min_cos, dim, max_cluster_size, sub_planes, n_scopes=n_clusters
     )
@@ -250,7 +245,9 @@ def semdedup(
     `max_cluster_size` arms the hot-cluster guard (module docstring);
     with it armed the rule weakens to "no earlier-ranked example in the
     same (cluster, sub-bucket)" for oversized clusters only."""
-    ranked = _cut(_ranked_clusters(vecs, id_col, vec_col, n_clusters, dim, codebook))
+    ranked = lineage_cut(  # cut as in semdedup_pairs
+        _ranked_clusters(vecs, id_col, vec_col, n_clusters, dim, codebook)
+    )
     dropped = (
         _pairs_from_ranked(
             ranked, id_col, min_cos, dim, max_cluster_size, sub_planes,

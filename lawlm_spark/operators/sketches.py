@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from lawlm_spark.session import lineage_cut
+
 # ---------------------------------------------------------------------------
 # HyperLogLog (Flajolet et al. 2007), p=8 -> m=256 registers.
 
@@ -510,17 +512,14 @@ def kmv_intersect_estimate(a: DataFrame, b: DataFrame, k: int = 64) -> DataFrame
     Both inputs must be same-k, same-salt sketches over the same key
     domain.
     """
-    from lawlm_spark.operators.components import _lineage_cut
-
     # lineage-cut all three sketch relations (<= k rows each): a and b
     # fan into the union AND the membership semi-joins, u into the
     # theta aggregate and the intersection count — uncut, every branch
     # replays the corpus-reducing sketch build (7 FileScans in the r8
     # d55 audit; 2 after, one per input side).
-    reliable = a.sparkSession.sparkContext.getCheckpointDir() is not None
-    a = _lineage_cut(a, reliable)
-    b = _lineage_cut(b, reliable)
-    u = _lineage_cut(kmv_union(a, b, k), reliable)
+    a = lineage_cut(a)
+    b = lineage_cut(b)
+    u = lineage_cut(kmv_union(a, b, k))
     kth = u.agg(F.max("h").alias("_kth"), F.count(F.lit(1)).alias("_n"))
     both = (
         u.join(a.select(F.col("h").alias("_ha")), u["h"] == F.col("_ha"), "left_semi")

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from lawlm_spark.functions.text import tokenize
+from lawlm_spark.session import lineage_cut
 
 
 def ctfidf_top_terms(
@@ -34,8 +35,6 @@ def ctfidf_top_terms(
 ) -> DataFrame:
     """(cluster, term, tf, score, rank): the k most distinctive terms
     per cluster, ties broken by term."""
-    from lawlm_spark.operators.components import _lineage_cut
-
     toks = docs.select(
         F.col(cluster_col).alias("cluster"),
         F.explode(tokenize(F.col(text_col))).alias("term"),
@@ -44,10 +43,7 @@ def ctfidf_top_terms(
     # (cluster, term) table instead of the token stream, and tf is
     # lineage-cut so its consumers don't each replay the corpus explode
     # (4 FileScans in the r8 d46 audit; 1 after).  Vocabulary-sized.
-    reliable = docs.sparkSession.sparkContext.getCheckpointDir() is not None
-    tf = _lineage_cut(
-        toks.groupBy("cluster", "term").agg(F.count("*").alias("tf")), reliable
-    )
+    tf = lineage_cut(toks.groupBy("cluster", "term").agg(F.count("*").alias("tf")))
     ft = tf.groupBy("term").agg(F.sum("tf").alias("f_t"))
     scal = tf.groupBy().agg(
         # coalesce: NULL on an empty corpus (see quality.unigram_nll note)
@@ -109,20 +105,16 @@ def token_drift(
         .groupBy("term")
         .agg(F.count("*").alias("c_b"))
     )
-    from lawlm_spark.operators.components import _lineage_cut
-
     # lineage-cut the union vocabulary: both consumers (the scalar
     # totals and the scored projection) otherwise replay BOTH corpus
     # tokenizations (4 FileScans in the r8 d47 audit; 2 after — one
     # per snapshot side, the minimum).  Vocabulary-sized.
-    reliable = docs_a.sparkSession.sparkContext.getCheckpointDir() is not None
-    joined = _lineage_cut(
+    joined = lineage_cut(
         ca.join(cb, "term", "full_outer").select(
             "term",
             F.coalesce("c_a", F.lit(0)).alias("c_a"),
             F.coalesce("c_b", F.lit(0)).alias("c_b"),
-        ),
-        reliable,
+        )
     )
     scal = joined.groupBy().agg(
         F.sum("c_a").alias("n_a"),

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from lawlm_spark.session import lineage_cut
+
 
 def undirected_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
     """(a, b) with a < b, distinct, self-loops dropped — the canonical
@@ -68,16 +70,13 @@ def triangles(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame
     between the two out-neighbors is then guaranteed to be oriented
     v -> w, so one equi-join finds it (no either-direction disjunct).
     """
-    from lawlm_spark.operators.components import _lineage_cut
-
     # lineage-cut both shared relations (the graph-op policy): `und`
     # fans into the degree aggregate (twice) + the orientation join,
     # and `o` fans into both wedge sides + the closing edge — uncut,
     # Catalyst replicates the whole upstream pair pipeline into every
     # branch (30 FileScans in the r8 d51 audit; 2 after).  Edge-sized.
-    reliable = edges.sparkSession.sparkContext.getCheckpointDir() is not None
-    und = _lineage_cut(undirected_edges(edges, src, dst), reliable)
-    o = _lineage_cut(oriented_edges(und), reliable)
+    und = lineage_cut(undirected_edges(edges, src, dst))
+    o = lineage_cut(oriented_edges(und))
     o1 = o.select(F.col("lo").alias("u"), F.col("hi").alias("v"), F.col("deg_hi").alias("dv"))
     o2 = o.select(F.col("lo").alias("u"), F.col("hi").alias("w"), F.col("deg_hi").alias("dw"))
     wedges = o1.join(o2, "u").filter(

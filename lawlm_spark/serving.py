@@ -28,6 +28,7 @@ from pyspark.sql import SparkSession
 from lawlm_spark.functions.llm import MAX_CONTEXT_CHARS, fake_llm_summary_py
 from lawlm_spark.localdata import local_rows
 from lawlm_spark.plans.rag import rag_answer
+from lawlm_spark.session import materialize
 from lawlm_spark.sources.mirror import mirror_stats, scan_mirror
 
 TRUNCATION_MARKER = "\n\n[Document truncated due to length...]"  # app.py:651-654
@@ -72,21 +73,24 @@ class RagService:
         # cosine over the full mirror stays available via
         # dense_retriever='brute' for debugging/recall baselines.
         self.spark = spark
-        # cached AND eagerly forced: the first /query fans each mirror
-        # into the sparse and dense retrieval branches concurrently, and
-        # a lazy cache makes the branches race to populate it ('Block
-        # already exists' warnings, each branch computing the partition
-        # — the same race the bench fixed in r3).  Startup pays the two
-        # scans once.
-        self.chunks = scan_mirror(spark, chunks_path).cache()
-        self.postings = scan_mirror(spark, postings_path).cache()
-        self.chunks.count()
-        self.postings.count()
+        # persisted AND eagerly forced (session.materialize): the first
+        # /query fans each mirror into the sparse and dense retrieval
+        # branches concurrently, and a lazy cache makes the branches race
+        # to populate it.  Startup pays the two scans once; close()
+        # releases both.
+        self.chunks, _n = materialize(scan_mirror(spark, chunks_path))
+        self.postings, _n = materialize(scan_mirror(spark, postings_path))
         self.case_fetcher = case_fetcher
         self.pdf_extractor = pdf_extractor
         self.dense_retriever = dense_retriever
         self.retriever_opts = dict(retriever_opts or {})
         self._stats: dict | None = None
+
+    def close(self) -> None:
+        """Unpersist the two cached mirrors; queries after this re-scan
+        the mirror on every call."""
+        self.chunks.unpersist()
+        self.postings.unpersist()
 
     def health(self) -> dict:
         return {"status": "healthy", "engine": "lawlm_spark"}

@@ -23,9 +23,10 @@ multi-executor cluster too:
   certified (all 9 streaming registry entries selfcheck green under
   RocksDB at sf0.01, identical values; NOTES_r10).
 
-The module also owns the engine's two session-state mechanisms:
-`scoped_conf` (the one way to override a session conf for a block) and
-`materialize` (the one persist -> register -> force protocol).
+The module also owns the engine's three session-state mechanisms:
+`scoped_conf` (the one way to override a session conf for a block),
+`materialize` (the one persist -> register -> force protocol) and
+`lineage_cut` (the one way to truncate a plan's lineage).
 """
 
 from __future__ import annotations
@@ -194,3 +195,26 @@ def materialize(
         raise
     log.info("materialize: persisted %d rows", n)
     return df, n
+
+
+def lineage_cut(df: DataFrame) -> DataFrame:
+    """Truncate `df`'s lineage with an eager checkpoint: a reliable
+    `checkpoint()` (HDFS/object store, survives executor loss — the
+    100 TB path) when the session has a checkpoint dir set, else
+    `localCheckpoint()` (fast, dies with its executor).  The session
+    checkpoint dir is the one switch; logs which cut it took.
+
+    Why a cut and not a persist (found by the connected-components
+    property test against a union-find reference): caching keeps the
+    data but the LOGICAL plan still nests one join per iteration, and
+    analyzer/optimizer time grows superlinearly with plan depth —
+    rounds get slower and slower.  A checkpoint replaces the plan with
+    a scan of the materialized rows, so every round's plan is
+    constant-size; for a table with several consumers it also stops
+    each consumer from re-running the upstream chain (Spark shares no
+    subplans)."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is not None:
+        log.info("lineage_cut: reliable checkpoint")
+        return df.checkpoint(eager=True)
+    log.info("lineage_cut: local checkpoint")
+    return df.localCheckpoint(eager=True)

@@ -70,6 +70,9 @@ def _neardup_judge_batch(
         verdict -> chunk-key anti-join dedups -> append completes.  The
         reverse order would lose the batch's chunks forever (replay
         self-matches, survivors come back empty).
+      * The append writes the index rows the judge already built and
+        cut, narrowed to the survivors (row-for-row near_dup_index over
+        them: both tables are per-document and deterministic).
       * The append itself heals per table — each table only receives
         ids it is missing, so a crash between the shingle and band
         appends cannot double-insert rows (duplicate shingles would
@@ -81,9 +84,9 @@ def _neardup_judge_batch(
         is already in the mirror.
     """
     from lawlm_spark.operators.dedup import (
+        _cut_near_dup_index,
+        _pairs_against_index,
         apply_incremental_near_dup,
-        incremental_near_dup_pairs,
-        near_dup_index,
     )
 
     sh_dir, bands_dir = os.path.join(index_dir, "shingles"), os.path.join(index_dir, "bands")
@@ -97,24 +100,22 @@ def _neardup_judge_batch(
         idx_bands = spark.read.parquet(bands_dir)
     else:
         idx_bands = local_rows(spark, [], f"{id_col} long, band int, band_key string")
-    pairs = incremental_near_dup_pairs(
-        docs, idx_sh, idx_bands, id_col, text_col,
-        min_jaccard=min_jaccard, **_NEARDUP_CFG,
-    )
+    new_sh, new_bands = _cut_near_dup_index(docs, id_col, text_col, **_NEARDUP_CFG)
+    pairs = _pairs_against_index(new_sh, new_bands, idx_sh, idx_bands, id_col, min_jaccard)
     kept = apply_incremental_near_dup(docs, pairs, id_col)
     # force: snapshot the verdict before any index mutation
     kept, _n = materialize(kept)
 
     def append_index() -> None:
-        new_sh, new_bands = near_dup_index(kept, id_col, text_col, **_NEARDUP_CFG)
-        if have_sh:
-            new_sh = new_sh.join(idx_sh.select(id_col).distinct(), id_col, "left_anti")
-        if have_bands:
-            new_bands = new_bands.join(
-                idx_bands.select(id_col).distinct(), id_col, "left_anti"
-            )
-        write_mirror(new_sh, sh_dir, mode="append")
-        write_mirror(new_bands, bands_dir, mode="append")
+        # shingles first: see the protocol above
+        for rows, have, idx, path in (
+            (new_sh, have_sh, idx_sh, sh_dir),
+            (new_bands, have_bands, idx_bands, bands_dir),
+        ):
+            rows = rows.join(kept.select(id_col), id_col, "left_semi")
+            if have:
+                rows = rows.join(idx.select(id_col).distinct(), id_col, "left_anti")
+            write_mirror(rows, path, mode="append")
 
     survivors = batch_df.join(kept.select(id_col), id_col, "left_semi")
     return survivors, append_index, kept

@@ -178,21 +178,26 @@ def test_pack_documents_precomputed_token_col(spark):
 
 
 def test_components_reliable_checkpoint_identical(spark, tmp_path):
-    """d15's 100 TB guidance is executable: with a session checkpoint dir
-    set, connected_components uses reliable df.checkpoint() per round
-    (survives executor loss) and produces identical labels."""
+    """d15's 100 TB guidance is executable: the session checkpoint dir is
+    the one switch.  Unset, connected_components cuts each round with
+    localCheckpoint; set, with reliable df.checkpoint() (survives
+    executor loss), whose files land under the dir — and the labels are
+    identical."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11)], ["id_a", "id_b"]
     )
-    expected = _labels(connected_components(pairs, use_reliable_checkpoint=False))
+    ckpt = tmp_path / "ckpt"
     old_dir = spark.sparkContext.getCheckpointDir()
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
     try:
-        # default=None auto-detects the session checkpoint dir
-        assert _labels(connected_components(pairs)) == expected
-        assert _labels(connected_components(pairs, use_reliable_checkpoint=True)) == expected
-    finally:
         # passing None clears it (SparkContext wraps with Option)
+        spark.sparkContext.setCheckpointDir(None)
+        expected = _labels(connected_components(pairs))
+        assert not ckpt.exists()
+        spark.sparkContext.setCheckpointDir(str(ckpt))
+        assert _labels(connected_components(pairs)) == expected
+        # a silent fall-back to localCheckpoint would write nothing here
+        assert any(p.is_file() for p in ckpt.rglob("*"))
+    finally:
         spark.sparkContext.setCheckpointDir(old_dir)
 
 

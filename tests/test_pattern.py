@@ -916,6 +916,35 @@ def test_bounded_single_exchange_plan(spark):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoop" not in plan
 
 
+def test_nfa_null_key_matches_like_any_key(spark):
+    """A NULL key's runs form one group, as Spark's window partitioning
+    makes them: Arrow hands the nullable long key over as float64 and
+    NaN != NaN must not split the group into one group per run.  Tiny
+    Arrow batches also carry the null key's block across batches."""
+    _ARROW = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    rows = [(k, i, s) for k in (None, 1) for i, s in enumerate("ABABA")]
+    runs = _runs(spark, rows)
+    pattern = [("A", "+"), ("B", "+"), ("A", "+")]
+
+    def collect():
+        return sorted(
+            (r["user_id"] is None, r["anchor_run_id"], r["match_len_runs"])
+            for r in match_nfa(runs, pattern, "user_id").collect()
+        )
+
+    want = [(False, 0, 3), (True, 0, 3)]
+    assert collect() == want
+    old = spark.conf.get(_ARROW, None)
+    spark.conf.set(_ARROW, "2")
+    try:
+        assert collect() == want
+    finally:
+        if old is None:
+            spark.conf.unset(_ARROW)
+        else:
+            spark.conf.set(_ARROW, old)
+
+
 def test_nfa_null_payload_in_long_column(spark):
     """A NULL in an input long run column (Arrow hands the group a
     float64 column with NaN) must round-trip as a true NULL through the

@@ -188,3 +188,50 @@ def test_failed_forcing_action_leaves_no_cached_block(spark):
             call(reg)
         assert _cache_is_empty(spark)
         assert all(h.storageLevel == none for h in reg)
+
+
+def _identifier(node: ast.AST) -> str | None:
+    """The name a node binds or refers to, if it has one."""
+    if isinstance(node, ast.Name):
+        return node.id
+    if isinstance(node, ast.Attribute):
+        return node.attr
+    if isinstance(node, (ast.arg, ast.keyword)):
+        return node.arg
+    if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+        return node.name
+    if isinstance(node, ast.alias):
+        return node.asname or node.name.rsplit(".", 1)[-1]
+    return None
+
+
+def test_checkpoint_calls_only_in_session():
+    """One lineage-cut protocol (session.lineage_cut): under lawlm_spark/
+    no module but session.py calls .checkpoint, .localCheckpoint or
+    getCheckpointDir, and nothing — __spark_entry__.py included — names
+    the retired `_lineage_cut` helper or a `use_reliable_checkpoint`
+    parameter.  AST walk, so docstrings and comments don't count."""
+    cut_calls = {"checkpoint", "localCheckpoint", "getCheckpointDir"}
+    retired = {"_lineage_cut", "use_reliable_checkpoint"}
+    pkg = os.path.join(REPO, "lawlm_spark")
+    session = os.path.join(pkg, "session.py")
+    offenders = []
+    for path in [*_py_files(pkg), os.path.join(REPO, "__spark_entry__.py")]:
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), filename=path)
+        in_pkg = path.startswith(pkg + os.sep)
+        where = os.path.relpath(path, REPO)
+        for node in ast.walk(tree):
+            name = _identifier(node)
+            if name in retired:
+                offenders.append(f"{where}:{node.lineno} names {name}")
+            if (
+                in_pkg
+                and path != session
+                and isinstance(node, ast.Call)
+                and _call_name(node) in cut_calls
+            ):
+                offenders.append(f"{where}:{node.lineno} calls {_call_name(node)}")
+    assert not offenders, (
+        "lineage cuts outside session.lineage_cut: " + ", ".join(offenders)
+    )

@@ -7,6 +7,7 @@ import tempfile
 import urllib.request
 
 import pytest
+from pyspark import StorageLevel
 
 from lawlm_spark.plans.rag import ingest_documents
 from lawlm_spark.serving import RagService, serve
@@ -23,16 +24,23 @@ def _fake_extract(data: bytes) -> str:
     return f"Page one of {data.decode().split('::')[1]}.\nPage two.\n"
 
 
-@pytest.fixture(scope="module")
-def service(spark, docs):
+def _mirror(docs) -> str:
     chunks, postings = ingest_documents(docs, chunk_size=256, overlap=32, min_chunk=64)
     base = tempfile.mkdtemp(prefix="serving_mirror_")
     write_mirror(chunks, base + "/chunks")
     write_mirror(postings, base + "/postings")
-    return RagService(
+    return base
+
+
+@pytest.fixture(scope="module")
+def service(spark, docs):
+    base = _mirror(docs)
+    svc = RagService(
         spark, base + "/chunks", base + "/postings",
         case_fetcher=_fake_fetch, pdf_extractor=_fake_extract,
     )
+    yield svc
+    svc.close()
 
 
 @pytest.fixture(scope="module")
@@ -260,3 +268,15 @@ def test_summarize_stream_midstream_failure_emits_error_and_done(server, service
     assert "event: error" in raw
     assert "llm backend down" in raw
     assert raw.rstrip().endswith("data: [DONE]")
+
+
+def test_close_releases_cached_mirrors(spark, docs):
+    """close() unpersists both mirrors the service cached at start.  Own
+    mirror: the cache is keyed by plan, so closing a service over the
+    fixture's mirror would also drop the fixture's cache."""
+    base = _mirror(docs.filter("doc_id < 10"))
+    svc = RagService(spark, base + "/chunks", base + "/postings")
+    assert svc.chunks.storageLevel.useMemory and svc.postings.storageLevel.useMemory
+    svc.close()
+    assert svc.chunks.storageLevel == StorageLevel.NONE
+    assert svc.postings.storageLevel == StorageLevel.NONE
