@@ -1690,19 +1690,18 @@ def _d20_incremental_neardup(spark: SparkSession, sf: str) -> DataFrame:
     md5 flag so corpus matches and within-batch (smaller-id) matches are
     both exercised.  Oracle: the same pair contract in SQL over the
     union, restricted to pairs whose judged side is new."""
-    from lawlm_spark.operators.dedup import incremental_near_dup_pairs, near_dup_index
+    from lawlm_spark.operators.dedup import _cut_near_dup_index, incremental_near_dup_pairs
 
     corpus = _neardup_corpus(load_table(spark, sf, "documents"))
     is_new = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1) < "8"
     old, new = corpus.filter(~is_new), corpus.filter(is_new)
-    sh, bands = near_dup_index(old, "doc_id", "text", n=3, num_hashes=8, bands=4)
     # in production the index is parquet (write_mirror) — one
-    # materialization per corpus.  The lineage cut simulates exactly
-    # that here, so the verify/band consumers don't each re-shingle the
-    # corpus (part of the 14 FileScans in the r8 plan audit).
-    from lawlm_spark.session import lineage_cut
-
-    sh, bands = lineage_cut(sh), lineage_cut(bands)
+    # materialization per corpus.  The cut index simulates exactly that
+    # here: the shingle table is cut before the bands are signed from
+    # it, so the old corpus is shingled once and the verify/band
+    # consumers don't each re-shingle it (part of the 14 FileScans in
+    # the r8 plan audit).
+    sh, bands = _cut_near_dup_index(old, "doc_id", "text", n=3, num_hashes=8, bands=4)
     return incremental_near_dup_pairs(
         new, sh, bands, "doc_id", "text", n=3, num_hashes=8, bands=4, min_jaccard=0.2
     )

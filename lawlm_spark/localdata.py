@@ -15,7 +15,10 @@ you had).
 evaluation, no matter how the frame is later coalesced, broadcast or
 written.  Use it for every literal-rows frame (query sets, sentinels,
 tiny dims); real data frames come from parquet scans and never hit
-this path.
+this path.  A per-request row of scalars (serving's question frame)
+is cheaper still as a `spark.sql` VALUES clause over bound
+parameters: a JVM-side LocalRelation with exact size stats and no
+Python worker at all.
 """
 
 from __future__ import annotations

@@ -30,7 +30,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from lawlm_spark.functions.vectors import cosine
+from lawlm_spark.functions.vectors import cosine, dot
 from lawlm_spark.operators.ranking import top_k
 
 
@@ -171,7 +171,7 @@ def rocchio_topk(
         )
         zero = F.lit(0).cast("long")
         add = lambda acc, x: acc + x  # noqa: E731
-        dot = F.aggregate(
+        dot_m = F.aggregate(
             F.zip_with(em, F.col("_q2l"), lambda a, b: a * b), zero, add
         )
         na = F.aggregate(F.transform(em, lambda a: a * a), zero, add)
@@ -179,7 +179,7 @@ def rocchio_topk(
             F.transform(F.col("_q2l"), lambda b: b * b), zero, add
         )
         score = F.round(
-            dot.cast("double")
+            dot_m.cast("double")
             / (F.sqrt(na.cast("double")) * F.sqrt(nb.cast("double"))),
             6,
         )
@@ -221,17 +221,21 @@ def rp_lsh_bucket(
     products.  `start` offsets the plane indices (same md5 family), so
     callers can draw EXTRA independent planes to refine a bucket —
     dedup.embedding_dup_pairs_lsh's hot-bucket guard uses planes
-    [num_planes, num_planes+extra)."""
-    bits = []
-    for p in range(start, start + num_planes):
-        signs = F.array(*[F.lit(s) for s in hyperplane_signs(p, dim)])
-        proj = F.aggregate(
-            F.zip_with(vec, signs, lambda x, s: x.cast("double") * s),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
-    return F.concat(*bits)
+    [num_planes, num_planes+extra).
+
+    All planes' signs enter the plan as ONE SQL array literal, mapped
+    to bits by one transform: building the key costs a fixed handful of
+    driver->JVM calls, not one per sign.  A null or short vector
+    projects to null, which reads as bit '0'."""
+    planes = ", ".join(
+        "array(" + ", ".join("1D" if s > 0 else "-1D" for s in hyperplane_signs(p, dim)) + ")"
+        for p in range(start, start + num_planes)
+    )
+    bits = F.transform(
+        F.expr(f"array({planes})"),
+        lambda signs: F.when(dot(vec, signs) >= 0, F.lit("1")).otherwise(F.lit("0")),
+    )
+    return F.array_join(bits, "")
 
 
 def rp_lsh_bucket_sql(

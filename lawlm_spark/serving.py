@@ -9,8 +9,12 @@ indexing) is Spark batch; this tier serves single questions by running
 the same hybrid-RRF plan over the mirror.  The deterministic fake LLM
 answers summaries; a real client plugs in behind `summarize`.
 
-Latency note: each request runs a local Spark job (~1-2 s on the test
-mirror).  A production deployment serves the online path from Qdrant
+Latency note: each request builds and runs one rag_answer plan,
+about 0.85 s per /query on a 150-document mirror (perfbench `serve`,
+2 cores of a 4-vCPU KVM host).  Spark jobs cover only about 0.25 s of
+that, in 9 jobs; the rest is driver time: building the plan (about
+1,300 py4j round trips, roughly 0.5 s) and planning between jobs.  A
+production deployment serves the online path from Qdrant
 exactly as the reference does (SURVEY §3 E2) and keeps this tier for
 batch-parity debugging.
 """
@@ -23,10 +27,9 @@ import time
 from collections.abc import Callable, Iterator
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from lawlm_spark.functions.llm import MAX_CONTEXT_CHARS, fake_llm_summary_py
-from lawlm_spark.localdata import local_rows
 from lawlm_spark.plans.rag import rag_answer
 from lawlm_spark.session import materialize
 from lawlm_spark.sources.mirror import mirror_stats, scan_mirror
@@ -149,10 +152,16 @@ class RagService:
             yield f"data: {json.dumps(summary[i : i + SSE_CHUNK_CHARS])}\n\n"
         yield "data: [DONE]\n\n"
 
-    def query(self, question: str, limit: int = 3) -> dict:
-        """Reference response shape: app.py:362-369."""
-        t0 = time.perf_counter()
-        q = local_rows(self.spark, [(0, question)], "query_id long, question string")
+    def answer_frame(self, question: str, limit: int = 3) -> DataFrame:
+        """The lazy one-question rag_answer plan that query() collects."""
+        # The one-row question frame is a LocalRelation built inside the
+        # JVM: exact size stats (its joins plan as broadcasts) and no
+        # Python worker on the query path.  The question arrives over
+        # HTTP, so it stays a bound parameter, never SQL text.
+        q = self.spark.sql(
+            "SELECT * FROM VALUES (CAST(0 AS BIGINT), :q) AS t(query_id, question)",
+            args={"q": question},
+        )
         opts = dict(self.retriever_opts)
         if (
             self.dense_retriever == "rp_lsh"
@@ -162,10 +171,15 @@ class RagService:
             # derive planes from the CACHED collection stats — the
             # mirror-stored-stats path (no corpus scan at query time)
             opts["n_vectors"] = self.collection_info()["points_count"]
-        rows = rag_answer(
+        return rag_answer(
             self.chunks, self.postings, q, k=limit,
             dense_retriever=self.dense_retriever, retriever_opts=opts,
-        ).collect()
+        )
+
+    def query(self, question: str, limit: int = 3) -> dict:
+        """Reference response shape: app.py:362-369."""
+        t0 = time.perf_counter()
+        rows = self.answer_frame(question, limit).collect()
         r = rows[0] if rows else None
         return {
             "question": question,
@@ -218,7 +232,10 @@ def make_handler(service: RagService):
                     question = req["question"]
                     limit = int(req.get("limit", 3))
                 except (TypeError, KeyError, ValueError):
-                    # malformed body, missing question, or non-numeric limit
+                    question = None
+                if not isinstance(question, str):
+                    # malformed body, missing or non-string question, or
+                    # non-numeric limit
                     self._send({"error": "body must be JSON with 'question'"}, 400)
                     return
                 self._send(service.query(question, limit))

@@ -86,6 +86,16 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
+        # No per-call origin capture: with it every functions/Column call
+        # walks the Python stack and ships the call site to the JVM (F.col:
+        # 13 py4j round trips instead of 3), most of a plan's build time.
+        # Cost: an analysis error no longer names the Python line that
+        # built the failing expression.  pyspark reads the flag once per
+        # process, at the first functions call under an active session.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # delete a reliable checkpoint (session.lineage_cut) once its RDD
+        # is garbage-collected, not when the checkpoint dir goes away
+        .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         # events.parquet carries TIMESTAMP(NANOS), which Spark cannot read
         # natively (PARQUET_TYPE_ILLEGAL); read as long, convert in the
         # source layer (sources/testdata.py) so views expose a real

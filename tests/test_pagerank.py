@@ -113,3 +113,37 @@ def test_pagerank_round_plan(spark):
     for line in plan.splitlines():
         if "Exchange" in line and "SinglePartition" not in line:
             assert "hashpartitioning" in line or "BroadcastExchange" in line, line
+
+
+def test_spent_reliable_checkpoints_are_deleted(spark, tmp_path):
+    """With a session checkpoint dir every round's cut is a reliable
+    checkpoint on disk; once nothing references a cut, the context
+    cleaner deletes its rdd-* directory.  The cleaner works
+    asynchronously after a JVM GC, so the test polls for up to 30 s;
+    the dir stays set meanwhile (the cleaner resolves paths through
+    it)."""
+    import gc
+    import time
+
+    ckpt = tmp_path / "ckpt"
+    old_dir = spark.sparkContext.getCheckpointDir()
+    spark.sparkContext.setCheckpointDir(str(ckpt))
+    try:
+        edges = spark.createDataFrame(
+            [(i, (7 * i + 1) % 30) for i in range(30)], "src long, dst long"
+        )
+        out = pagerank(edges, iterations=6)
+        assert out.count() == 30
+        assert list(ckpt.rglob("rdd-*"))  # the cuts were reliable
+        del out, edges
+        deadline = time.monotonic() + 30
+        while True:
+            gc.collect()
+            spark.sparkContext._jvm.java.lang.System.gc()
+            left = list(ckpt.rglob("rdd-*"))
+            if not left or time.monotonic() > deadline:
+                break
+            time.sleep(0.5)
+        assert not left, [p.name for p in left]
+    finally:
+        spark.sparkContext.setCheckpointDir(old_dir)

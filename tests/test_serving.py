@@ -9,7 +9,8 @@ import urllib.request
 import pytest
 from pyspark import StorageLevel
 
-from lawlm_spark.plans.rag import ingest_documents
+from lawlm_spark.localdata import local_rows
+from lawlm_spark.plans.rag import ingest_documents, rag_answer
 from lawlm_spark.serving import RagService, serve
 from lawlm_spark.sources.mirror import write_mirror
 
@@ -280,3 +281,69 @@ def test_close_releases_cached_mirrors(spark, docs):
     svc.close()
     assert svc.chunks.storageLevel == StorageLevel.NONE
     assert svc.postings.storageLevel == StorageLevel.NONE
+
+
+# Quote, backslash, a named-marker lookalike, a comment-injection tail,
+# a substitution lookalike and non-ASCII text: each must reach the plan
+# as the literal question string.
+HOSTILE_QUESTIONS = [
+    "what's the fast table scan join?",
+    "scan \\ join \\n window \\' agg",
+    "order :q filter :question",
+    "customer order'); DROP TABLE chunks;-- filter",
+    "${x} stream window agg ${spark.sql.ansi.enabled}",
+    "Schadensersatz für Verträge — 契約 scan join ü",
+]
+
+
+def test_query_parity_with_batch_for_hostile_questions(spark, server, service):
+    """Each /query answer equals batch rag_answer over a local_rows
+    question frame: the bound-parameter question frame changes nothing
+    an answer shows, whatever characters the question holds."""
+    n = service.collection_info()["points_count"]
+    rows = rag_answer(
+        service.chunks, service.postings,
+        local_rows(spark, list(enumerate(HOSTILE_QUESTIONS)), "query_id long, question string"),
+        k=3, dense_retriever="rp_lsh", retriever_opts={"n_vectors": n},
+    ).collect()
+    assert len(rows) == len(HOSTILE_QUESTIONS)
+    for r in rows:
+        q = HOSTILE_QUESTIONS[r["query_id"]]
+        assert r["question"] == q
+        out = _post(server + "/query", {"question": q, "limit": 3})
+        assert out["question"] == q
+        assert out["summary"] == r["summary"]
+        assert out["documents_found"] == r["n_sources"]
+        assert out["sources"] == (r["context"].split("\n\n") if r["context"] else [])
+    assert any(r["n_sources"] > 0 for r in rows)
+
+
+def test_non_string_question_is_400(server):
+    for bad in (None, 7, ["scan"], {"q": "scan"}):
+        assert _post_raises(server + "/query", {"question": bad}) == 400
+
+
+def test_question_plan_build_round_trip_budget(spark, service, monkeypatch):
+    """Building (not running) one /query plan stays within 2,500
+    driver->JVM round trips: the JVM-local question frame, the one-
+    literal LSH planes and no per-call origin capture.  A literal per
+    plane sign with origin capture on took 3,800-4,800 here."""
+    import gc
+
+    from py4j import java_gateway
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    service.collection_info()  # stats cached: the plan build runs no job
+    calls = []
+    send = java_gateway.GatewayClient.send_command
+
+    def counting(self, *args, **kwargs):
+        calls.append(1)
+        return send(self, *args, **kwargs)
+
+    gc.collect()
+    monkeypatch.setattr(java_gateway.GatewayClient, "send_command", counting)
+    service.answer_frame("fast table scan join", 3)
+    n = len(calls)
+    monkeypatch.undo()
+    assert 0 < n <= 2500, n

@@ -5,7 +5,13 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from lawlm_spark.functions.vectors import cosine, fake_embedding, normalize
-from lawlm_spark.operators.similarity import brute_force_topk, rp_lsh_topk
+from lawlm_spark.operators.similarity import (
+    brute_force_topk,
+    hyperplane_signs,
+    rp_lsh_bucket,
+    rp_lsh_bucket_sql,
+    rp_lsh_topk,
+)
 from lawlm_spark.sources.testdata import load_table
 
 
@@ -45,6 +51,59 @@ def test_lsh_results_subset_of_brute(spark):
     for r in lsh:
         # same cosine as exact scoring; LSH only restricts the candidate set
         assert abs(brute[(r["query_id"], r["vec_id"])] - r["cos"]) < 1e-9
+
+
+def _per_plane_bucket(vec, dim, num_planes, start=0):
+    """The earlier rp_lsh_bucket: one F.lit array and one concat bit
+    per plane — the reference the one-literal form must reproduce."""
+    bits = []
+    for p in range(start, start + num_planes):
+        signs = F.array(*[F.lit(s) for s in hyperplane_signs(p, dim)])
+        proj = F.aggregate(
+            F.zip_with(vec, signs, lambda x, s: x.cast("double") * s),
+            F.lit(0.0),
+            lambda acc, v: acc + v,
+        )
+        bits.append(F.when(proj >= 0, F.lit("1")).otherwise(F.lit("0")))
+    return F.concat(*bits)
+
+
+def test_lsh_bucket_matches_per_plane_form_and_duckdb(spark):
+    """rp_lsh_bucket equals the per-plane concat form and the DuckDB
+    oracle twin on 400 embeddings plus a null and an empty vector, for
+    several plane counts and a nonzero `start`."""
+    import duckdb
+
+    emb = spark.range(400).select(
+        F.col("id").alias("vec_id"),
+        fake_embedding(F.concat(F.lit("doc "), F.col("id")), 64).alias("embedding"),
+    )
+    edge = spark.createDataFrame(
+        [(-1, None), (-2, [])], "vec_id long, embedding array<double>"
+    )
+    vecs = emb.unionByName(edge)
+    rows = vecs.collect()
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (vec_id BIGINT, e DOUBLE[])")
+    con.executemany(
+        "INSERT INTO t VALUES (?, ?)", [(r["vec_id"], r["embedding"]) for r in rows]
+    )
+    for planes, start in [(2, 0), (3, 0), (8, 0), (16, 0), (3, 2)]:
+        got = {
+            r["vec_id"]: (r["b"], r["old"])
+            for r in vecs.select(
+                "vec_id",
+                rp_lsh_bucket(F.col("embedding"), 64, planes, start).alias("b"),
+                _per_plane_bucket(F.col("embedding"), 64, planes, start).alias("old"),
+            ).collect()
+        }
+        sql = rp_lsh_bucket_sql("e", 64, planes, start)
+        want = dict(con.execute(f"SELECT vec_id, {sql} FROM t").fetchall())
+        assert len(got) == len(rows) == len(want)
+        for vid, (b, old) in got.items():
+            assert len(b) == planes
+            assert b == old == want[vid], (planes, start, vid)
+        assert got[-1][0] == got[-2][0] == "0" * planes
 
 
 def test_lsh_plan_construction_needs_stats(spark):
